@@ -58,7 +58,10 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     A small corpus arriving as one parquet file is one input split — every
     downstream hash/shingle computation would run on a single core.  At real
     scale the scan has thousands of splits and this is a no-op (we never
-    REDUCE the partition count)."""
+    REDUCE the partition count).  A streaming frame is returned unchanged:
+    it has no RDD to count, and each micro-batch brings its own splits."""
+    if df.isStreaming:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *cols) if cols else df.repartition(target)
@@ -202,6 +205,96 @@ def lsh_band_keys(sig: Column, *, bands: int, rows: int) -> Column:
     return F.array(*keys)
 
 
+# ---------------------------------------------------------------------------
+# minhash LSH pipeline: one shingle -> signature -> band chain and one exact
+# verify, shared by every minhash operator (batch, index and streaming)
+
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc, sh): the distinct word n-gram set of every doc with >= n tokens,
+    _spread over the cluster (a one-split corpus otherwise runs the whole
+    shingle+signature pass on ONE core: r13 saw a single 9s task).
+
+    The short-doc filter runs on the RAW token count, not size(sh) > 0:
+    the two are equivalent (shingles are non-empty iff the doc has >= n
+    tokens; NULL text fails both), but Catalyst pushes the filter below
+    the _spread exchange, and the size(sh) form made the scan partition
+    evaluate the whole shingle expression single-task (r13 event-log
+    probe: the pushed filter was a multi-second one-core stage)."""
+    return _spread(df.filter(F.size(tokenize(F.lower(F.col(text_col)))) >= n)).select(
+        F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh")
+    )
+
+
+def _band_keys(sh: Column, *, k: int, bands: int) -> Column:
+    """The ``bands`` LSH keys of a shingle-set column's k-permutation
+    MinHash signature, as an INLINE array the caller explodes or
+    posexplodes directly — never through a named column.  With an
+    attribute child, InferFiltersFromGenerate adds size(bands) > 0, and
+    filter pushdown inlines the whole k-hash signature tree into the
+    scan-side filter: the r13 event-log probe showed it evaluated per row,
+    single-task, BELOW the _spread exchange (8.9s of build_minhash_index's
+    13.9s), then recomputed above.  An inline CreateArray child skips the
+    inference; the array is fixed-size ``bands`` anyway, so the filter is
+    vacuous."""
+    return lsh_band_keys(minhash_signature(sh, k=k), bands=bands, rows=k // bands)
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |a∩b| / (|a|+|b|-|a∩b|) of two distinct-shingle array
+    columns — the verify step every LSH candidate pair goes through."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def _banded_corpus(
+    df: DataFrame, id_col: str, text_col: str, *, n: int, k: int, bands: int
+) -> tuple[DataFrame, DataFrame]:
+    """(base, banded) for the in-session band joins of minhash_lsh_pairs and
+    minhash_lsh_dedup.
+
+    base, the (doc, sh) shingle sets, is cached: it feeds the signature pass
+    and both sides of the verify join.  It is not released: r13 measured
+    that an identical re-call reuses the cache entry (same logical plan ->
+    same InMemoryRelation), and an isolated rerun without it went 4.9s ->
+    20.1s.  Callers cycling many corpora through one session can
+    clearCache().
+
+    banded, the (doc, band) rows, is eagerly localCheckpointed (r13; was
+    cache() in r12).  The k-hash signature pass, the dominant per-row cost,
+    has two consumers (both join sides, or the per-band representative
+    aggregate and the star probe), and AQE materializes each consumer's
+    stages independently, re-running the signatures per stage (r12
+    event-log probe: the same 32-hash pass in 4+ concurrent stages).
+    Unlike a cache, the RDD leaf is not re-analyzed by every downstream
+    query and cannot be raced on.  A checkpoint does no shuffle, so it keeps
+    the uniform _spread partitioning: a repartition on band concentrates
+    each mega-duplicate cluster's pair or star-edge generation in one task
+    (r12: 1.8s -> 7s for pairs, 2.8s -> 37.8s for the star).  The rows are
+    slim, bands x corpus rows; each call's checkpoint is freed once the
+    driver JVM garbage-collects its last reference."""
+    base = _shingle_sets(df, id_col, text_col, n).cache()
+    banded = base.select(
+        "doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band")
+    ).localCheckpoint(eager=True)
+    return base, banded
+
+
+def _verified_pairs(cand: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
+    """(d1, d2, jaccard) of the candidate pairs whose exact shingle-set
+    Jaccard reaches ``threshold``; shingle arrays stay out of the band
+    join and are re-attached only for the candidates."""
+    s1 = base.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
+    s2 = base.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
+    return (
+        cand.join(s1, "d1")
+        .join(s2, "d2")
+        .withColumn("jaccard", _jaccard("sh1", "sh2"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("d1", "d2", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -225,42 +318,7 @@ def minhash_lsh_pairs(
     (k, bands) for the recall/cost point: 8 bands x 4 rows has ~97% recall
     at j=0.8.
     """
-    rows = k // bands
-    # shingle sets are cached: they feed the signature pass AND both sides of
-    # the verification join — without the cache the corpus is re-shingled
-    # three times.
-    # The short-doc filter runs on the RAW token count, not size(sh) > 0:
-    # the two are equivalent (shingles are non-empty iff the doc has >= n
-    # tokens; NULL text fails both), but Catalyst pushes the filter below
-    # the _spread exchange, and the size(sh) form made the scan partition
-    # evaluate the whole shingle expression single-task (r13 event-log
-    # probe: the pushed filter was a multi-second one-core stage).
-    base = (
-        _spread(df.filter(F.size(tokenize(F.lower(F.col(text_col)))) >= n))
-        .select(F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh"))
-        .cache()
-    )
-    # The banded frame is localCheckpointed (r13, same transform as
-    # embedding_near_dup_pairs): the self-join consumes it twice and the
-    # k-permutation signature pass — the operator's dominant per-row cost —
-    # was otherwise evaluated once per side (AQE broadcasts one side, whose
-    # BroadcastExchange can never reuse the probe side's stages).  The
-    # eager checkpoint runs shingle+signature ONCE (through base's cache)
-    # into an RDD leaf both sides read.  Crucially it PRESERVES the
-    # uniform _spread partitioning: the r12-measured 1.8s -> 7s trap was a
-    # hash repartition on band CONCENTRATING each mega-duplicate cluster's
-    # quadratic pair generation into one task — a checkpoint does no
-    # shuffle, so hot-band pair generation stays spread exactly as before.
-    # The stored rows are slim (doc id, band long) = bands x corpus rows,
-    # the same bytes the band join already broadcasts.
-    banded = base.select(
-        "doc",
-        F.explode(
-            lsh_band_keys(minhash_signature(F.col("sh"), k=k), bands=bands, rows=rows)
-        ).alias("band"),
-    ).localCheckpoint(eager=True)
-    # the band shuffle carries ONLY (doc, band) — shingle arrays stay out of
-    # the 8x-exploded join and are re-attached just for the few candidates.
+    base, banded = _banded_corpus(df, id_col, text_col, n=n, k=k, bands=bands)
     a = banded.select(F.col("doc").alias("d1"), "band")
     b = banded.select(F.col("doc").alias("d2"), "band")
     cand = (
@@ -271,13 +329,7 @@ def minhash_lsh_pairs(
     )
     if not verify:
         return cand
-    s1 = base.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
-    pairs = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    out = pairs.withColumn("jaccard", inter / union).filter(F.col("jaccard") >= threshold)
-    return out.select("d1", "d2", "jaccard")
+    return _verified_pairs(cand, base, threshold)
 
 
 def minhash_lsh_dedup(
@@ -306,37 +358,7 @@ def minhash_lsh_dedup(
     recipes): a doc joins a cluster only through its bucket representative,
     so a doc similar to the cluster but not to the representative can split
     off; with 8 bands each doc gets 8 chances, making that rare."""
-    rows = k // bands
-    # raw-token-count filter: equivalent to size(sh) > 0 but cheap when
-    # Catalyst pushes it below the _spread exchange (see minhash_lsh_pairs)
-    base = (
-        _spread(df.filter(F.size(tokenize(F.lower(F.col(text_col)))) >= n))
-        .select(F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh"))
-        .cache()
-    )
-    banded = base.select(
-        "doc",
-        F.explode(
-            lsh_band_keys(minhash_signature(F.col("sh"), k=k), bands=bands, rows=rows)
-        ).alias("band"),
-    ).localCheckpoint(eager=True)
-    # banded is eagerly localCheckpointed (r13; was cache() in r12): the
-    # k-permutation signature pass (interpreted HOF, the operator's
-    # dominant per-row cost) has two consumers — the per-band
-    # representative aggregate and the star-join probe side — and without
-    # materialization AQE materializes each consumer's stages
-    # independently, re-running the signatures per stage (r12 event-log
-    # probe: the same 32-hash pass appeared in 4+ concurrent stage
-    # materializations).  The checkpoint beats the cache on both of the
-    # cache's residual costs: every downstream query re-ANALYZED the whole
-    # scan+shingle+signature subtree (cache substitution happens after
-    # analysis), and concurrent stage materializations could still race to
-    # compute the same cached partitions.  The stored rows are slim
-    # (doc id, band long) = bands x corpus rows, the same bytes the band
-    # shuffle itself moves, spilled to disk at scale like a shuffle file.
-    # (see minhash_lsh_pairs: a repartition("band") to share one exchange
-    # measured 2.8s -> 37.8s here — it serializes hot-band star-edge
-    # generation into single tasks; the broadcast join path keeps it spread)
+    base, banded = _banded_corpus(df, id_col, text_col, n=n, k=k, bands=bands)
     rep = banded.groupBy("band").agg(F.min("doc").alias("d1"))
     star = (
         banded.join(rep, "band")
@@ -344,22 +366,7 @@ def minhash_lsh_dedup(
         .select("d1", F.col("doc").alias("d2"))
         .dropDuplicates(["d1", "d2"])
     )
-    s1 = base.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
-    pairs = star.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    verified = pairs.filter((inter / union) >= threshold).select("d1", "d2")
-    # NOTE (ADVICE r12 "unpersist banded"): deliberately NOT unpersisted.
-    # Measured (r13 probe, 32 cores): releasing base/banded here forces a
-    # re-call with the identical inputs to recompute the whole shingle +
-    # 32-hash signature pipeline — isolated rerun 4.9s -> 20.1s — because
-    # an identical replan otherwise REUSES these very cache entries (same
-    # logical plan -> same InMemoryRelation), which also means repeated
-    # identical calls do not grow executor storage.  The rows are slim
-    # (doc id + band long) and MEMORY_AND_DISK spills at scale; callers
-    # cycling many DIFFERENT corpora through one session can clearCache().
-    return connected_components(verified)
+    return connected_components(_verified_pairs(star, base, threshold).select("d1", "d2"))
 
 
 def contamination_check(
@@ -510,60 +517,60 @@ def connected_components(
     # distributed pointer-jump loop runs exactly as before; the cap is a
     # parameter, not a config lie: its default is chosen for driver-RAM
     # safety, not for this box.
-    if driver_solve_max and driver_solve_max > 0:
-        # size gate and null-endpoint check in ONE pass over the limited
-        # edge set (r13, ADVICE r12): when the limit covers all edges the
-        # null flag is exact, so a null-edged graph skips straight to the
-        # distributed loop without a wasted full collect
-        probe = (
-            edges.limit(driver_solve_max + 1)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.col("u").isNull() | F.col("v").isNull()).alias("has_null"),
-            )
-            .first()
-        )
-        # null endpoints would need the loop's null-equality semantics —
-        # the probe's has_null flag routes them there WITHOUT collecting
-        if probe["n"] <= driver_solve_max and not probe["has_null"]:
-            rows = edges.collect()
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for u, v in rows:
-                if u not in parent:
-                    parent[u] = u
-                if v not in parent:
-                    parent[v] = v
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[ru] = rv
-            out_schema = T.StructType(
-                [
-                    T.StructField("doc", edges.schema["u"].dataType, True),
-                    T.StructField("cluster", edges.schema["u"].dataType, True),
-                ]
-            )
-            comp_min: dict = {}
-            for x in parent:
-                r = find(x)
-                m = comp_min.get(r)
-                if m is None or x < m:
-                    comp_min[r] = x
-            data = [(x, comp_min[find(x)]) for x in parent]
-            return spark.createDataFrame(data, out_schema)
-    labels = edges.select("u").distinct().withColumn("lbl", F.col("u"))
     base = spill = None
     own_dir = False
-    converged = False
     try:
+        if driver_solve_max and driver_solve_max > 0:
+            # size gate and null-endpoint check in ONE pass over the limited
+            # edge set (r13, ADVICE r12): when the limit covers all edges the
+            # null flag is exact, so a null-edged graph skips straight to the
+            # distributed loop without a wasted full collect
+            probe = (
+                edges.limit(driver_solve_max + 1)
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.max(F.col("u").isNull() | F.col("v").isNull()).alias("has_null"),
+                )
+                .first()
+            )
+            # null endpoints would need the loop's null-equality semantics —
+            # the probe's has_null flag routes them there WITHOUT collecting
+            if probe["n"] <= driver_solve_max and not probe["has_null"]:
+                rows = edges.collect()
+                parent: dict = {}
+
+                def find(x):
+                    r = x
+                    while parent[r] != r:
+                        r = parent[r]
+                    while parent[x] != r:  # path compression
+                        parent[x], x = r, parent[x]
+                    return r
+
+                for u, v in rows:
+                    if u not in parent:
+                        parent[u] = u
+                    if v not in parent:
+                        parent[v] = v
+                    ru, rv = find(u), find(v)
+                    if ru != rv:
+                        parent[ru] = rv
+                out_schema = T.StructType(
+                    [
+                        T.StructField("doc", edges.schema["u"].dataType, True),
+                        T.StructField("cluster", edges.schema["u"].dataType, True),
+                    ]
+                )
+                comp_min: dict = {}
+                for x in parent:
+                    r = find(x)
+                    m = comp_min.get(r)
+                    if m is None or x < m:
+                        comp_min[r] = x
+                data = [(x, comp_min[find(x)]) for x in parent]
+                return spark.createDataFrame(data, out_schema)
+        labels = edges.select("u").distinct().withColumn("lbl", F.col("u"))
+        converged = False
         for rnd in range(max_iter):
             # rename to break self-join lineage ambiguity
             lab_v = labels.select(F.col("u").alias("vv"), F.col("lbl").alias("vlbl"))
@@ -645,8 +652,11 @@ def connected_components(
                 shutil.rmtree(local[-1], ignore_errors=True)
             # remote checkpoint dirs (hdfs://, s3://...) are left to the
             # cluster's temp-dir hygiene — cheap slim files, two paths
-    # the edge cache is deliberately left alive (same rationale as
-    # minhash_lsh_dedup's banded cache): an identical re-call reuses it
+        # every path has materialized its labels by now (driver-built
+        # frame or checkpoint), so the edge cache has no reader left; kept,
+        # it is never reused (under the minhash dedups its plan embeds that
+        # call's fresh banded checkpoint) and pins storage for the session
+        edges.unpersist()
     return labels.select(F.col("u").alias("doc"), F.col("lbl").alias("cluster"))
 
 
@@ -2281,29 +2291,10 @@ def build_minhash_index(
     the band_idx 0 row (r13: carrying the full shingle array on every one
     of the ``bands`` rows multiplied the index write volume ~bands-fold
     for bytes the verify step only needs once)."""
-    rows = k // bands
-    # _spread: a small corpus arriving as one input split would otherwise
-    # run the whole shingle+signature pass — and the index write — on ONE
-    # core (the r13 event-log probe showed a single 9s task).  The raw-
-    # token-count filter is equivalent to size(sh) > 0 but stays cheap
-    # when Catalyst pushes it below the exchange (see minhash_lsh_pairs).
-    base = _spread(
-        df.filter(F.size(tokenize(F.lower(F.col(text_col)))) >= n)
-    ).select(F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh"))
-    # posexplode the band-key expression INLINE (not a named `bands`
-    # column): with an attribute child, InferFiltersFromGenerate adds
-    # size(bands) > 0, and filter pushdown inlines the whole 32-hash
-    # signature tree into the scan-side filter — the r13 event-log probe
-    # showed it evaluated per row, single-task, BELOW the _spread exchange
-    # (8.9s of the build's 13.9s), then recomputed above.  An inline
-    # CreateArray child skips the inference (same shape minhash_lsh_pairs
-    # uses); the array is fixed-size bands anyway, so the filter is vacuous.
-    out = base.select(
+    out = _shingle_sets(df, id_col, text_col, n).select(
         "doc",
         "sh",
-        F.posexplode(
-            lsh_band_keys(minhash_signature(F.col("sh"), k=k), bands=bands, rows=rows)
-        ).alias("band_idx", "band"),
+        F.posexplode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band_idx", "band"),
     )
     out = out.withColumn("sh", F.when(F.col("band_idx") == 0, F.col("sh")))
     out.write.mode(mode).parquet(path)
@@ -2328,23 +2319,15 @@ def dedup_against_index(
     The existing corpus is never re-shingled or re-hashed; the join
     shuffles only the new batch's (doc, band) pairs plus matching index
     partitions."""
-    rows = k // bands
     spark = new_df.sparkSession
     # _spread the index read too: a small index packs into ONE scan split,
     # and the band join + exact verify inherit that single partition (the
     # r13 event-log probe showed them as one 7.8s task); at real scale the
     # read has many splits and this is a no-op
     idx = _spread(spark.read.parquet(index_path))
-    base = _spread(
-        new_df.filter(F.size(tokenize(F.lower(F.col(text_col)))) >= n)
-    ).select(
-        F.col(id_col).alias("nid"), shingles(F.col(text_col), n).alias("nsh")
-    ).cache()
+    base = _shingle_sets(new_df, id_col, text_col, n).toDF("nid", "nsh").cache()
     banded = base.select(
-        "nid",
-        F.explode(
-            lsh_band_keys(minhash_signature(F.col("nsh"), k=k), bands=bands, rows=rows)
-        ).alias("band"),
+        "nid", F.explode(_band_keys(F.col("nsh"), k=k, bands=bands)).alias("band")
     )
     cand = (
         banded.join(idx.select(F.col("doc").alias("xid"), "band"), "band")
@@ -2364,10 +2347,8 @@ def dedup_against_index(
             "xid",
         )
     )
-    inter = F.size(F.array_intersect("nsh", "xsh"))
-    union = F.size("nsh") + F.size("xsh") - inter
     return (
-        pairs.withColumn("jaccard", inter / union)
+        pairs.withColumn("jaccard", _jaccard("nsh", "xsh"))
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("nid").alias("new_id"), F.col("xid").alias("index_id"), "jaccard")
     )

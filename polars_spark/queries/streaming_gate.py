@@ -37,18 +37,21 @@ def _stream_dir(sf_dir: str, table: str = "events") -> str:
     production this path is the landing directory itself."""
     import hashlib
     import os
+    import tempfile
 
     src = os.path.join(sf_dir, f"{table}.parquet")
     # key the staging dir on the SOURCE CONTENT fingerprint, not the path
     # alone: degenerate-sweep scratch dirs embed pids, and a recycled pid
-    # (or any stale /tmp state) must never serve another run's symlinks —
+    # (or any stale temp-dir state) must never serve another run's symlinks —
     # round-9 preflight saw exactly one such cross-mode read
     try:
         st = os.stat(src)
         fp = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
     except OSError:
         fp = sf_dir
-    d = f"/tmp/polars_spark_stream/{hashlib.md5(fp.encode()).hexdigest()[:12]}/{table}"
+    d = os.path.join(
+        tempfile.gettempdir(), "polars_spark_stream", hashlib.md5(fp.encode()).hexdigest()[:12], table
+    )
     os.makedirs(d, exist_ok=True)
     # a Spark-written fixture is a DIRECTORY of part files: symlink each
     # part file (a directory symlink hides the data from the file stream

@@ -408,8 +408,8 @@ def streaming_minhash_suppress(
     2. Verification (stateless stream-static join): candidates join the
        static corpus (in production: the landing table the stream appends
        to, re-read per micro-batch) on both endpoints and the exact
-       jaccard is computed JVM-side (array_intersect on the distinct
-       shingle sets) — only candidates are ever verified.
+       jaccard of the distinct shingle sets is computed JVM-side — only
+       candidates are ever verified.
 
     Within one micro-batch, rows are processed in ``id_col`` order, so the
     min-id doc of a batch becomes the bucket representative — under an
@@ -421,17 +421,10 @@ def streaming_minhash_suppress(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState
 
-    from polars_spark.llm import lsh_band_keys, minhash_signature, shingles
+    from polars_spark.llm import _band_keys, _jaccard, _shingle_sets, shingles
 
-    rows_per = k // bands
-    base = stream.select(
-        F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh")
-    ).filter(F.size("sh") > 0)
-    banded = base.select(
-        "doc",
-        F.explode(
-            lsh_band_keys(minhash_signature(F.col("sh"), k=k), bands=bands, rows=rows_per)
-        ).alias("band"),
+    banded = _shingle_sets(stream, id_col, text_col, n).select(
+        "doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band")
     )
 
     def update(key_tuple, pdfs, state: GroupState):
@@ -478,9 +471,7 @@ def streaming_minhash_suppress(
     d_side = corpus_sh.select(F.col("__cid").alias("doc"), F.col("__csh").alias("dsh"))
     r_side = corpus_sh.select(F.col("__cid").alias("rep"), F.col("__csh").alias("rsh"))
     joined = cands.join(d_side, "doc").join(r_side, "rep")
-    inter = F.size(F.array_intersect("dsh", "rsh"))
-    union = F.size("dsh") + F.size("rsh") - inter
-    j = inter.cast("double") / union
+    j = _jaccard("dsh", "rsh")
     return (
         joined.withColumn("jaccard", F.floor(j * 1e6 + F.lit(0.5)) / 1e6)
         .filter(F.col("jaccard") >= threshold)

@@ -47,6 +47,42 @@ def test_minhash_lsh_recall(spark, docs):
         assert recall >= 0.9, f"LSH recall {recall} below 0.9 (exact={len(exact)})"
 
 
+def test_band_keys_pinned(spark):
+    # order-insensitive digest of the (doc, band) rows the minhash operators
+    # join on, over the sf0.01 corpus: any drift in shingling, the signature
+    # hashes or the band split changes it
+    from polars_spark.llm import _band_keys, _shingle_sets
+
+    path = os.path.join(os.path.dirname(SF_DIR), "sf0.01", "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip("sf0.01 testdata missing")
+    banded = _shingle_sets(spark.read.parquet(path), "doc_id", "text", 3).select(
+        "doc", F.explode(_band_keys(F.col("sh"), k=32, bands=8)).alias("band")
+    )
+    r = banded.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("doc", "band").cast("decimal(38,0)")).alias("h"),
+    ).first()
+    assert (r["n"], int(r["h"])) == (4000, 45786819432042991326)
+
+
+def test_minhash_dedup_cache_does_not_grow(spark, docs):
+    # repeated calls reuse the cached shingle sets and release the
+    # connected-components edge cache: the count of cached (not
+    # localCheckpointed) RDDs stays flat across calls
+    from polars_spark.llm import minhash_lsh_dedup
+
+    def cached():
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return sum(1 for key in m.keySet().toArray() if not m.get(key).rdd().isCheckpointed())
+
+    counts = []
+    for _ in range(3):
+        minhash_lsh_dedup(docs, "doc_id", "text").collect()
+        counts.append(cached())
+    assert counts[0] == counts[1] == counts[2], counts
+
+
 def test_simhash_flags_near_dups(spark, docs):
     from polars_spark.llm import ngram_jaccard_pairs, simhash_near_pairs
 

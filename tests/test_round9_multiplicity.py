@@ -29,18 +29,11 @@ def _corpus(spark, n_distinct: int, mult: int):
 
 
 def _counts(spark, n_distinct: int, mult: int, bands: int = 8, k: int = 32):
-    from polars_spark.llm import lsh_band_keys, minhash_signature, shingles
+    from polars_spark.llm import _band_keys, _shingle_sets
 
-    rows = k // bands
-    df = _corpus(spark, n_distinct, mult)
-    base = df.select(
-        F.col("doc_id").alias("doc"), shingles(F.col("text"), 3).alias("sh")
-    ).filter(F.size("sh") > 0)
-    banded = base.select(
-        "doc",
-        F.explode(
-            lsh_band_keys(minhash_signature(F.col("sh"), k=k), bands=bands, rows=rows)
-        ).alias("band"),
+    # the engine's own shingle -> band chain, exactly as the operators run it
+    banded = _shingle_sets(_corpus(spark, n_distinct, mult), "doc_id", "text", 3).select(
+        "doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band")
     )
     a = banded.select(F.col("doc").alias("d1"), "band")
     b = banded.select(F.col("doc").alias("d2"), "band")

@@ -12,7 +12,7 @@ one summary block to paste into COVERAGE.md:
   2. empty-table sweep              (tools/check.py --empty)
   3. single-row sweep               (tools/check.py --single)
   4. all-null sweep                 (tools/check.py --allnull)
-  5. determinism sweep              (tools/determinism.py)
+  5. determinism sweep              (tools/invariance.py)
   6. plan audit                     (tools/audit_plans.py)
   7. pytest                         (python -m pytest tests/ -q)
   8. fuzz soak (optional)           (SPARK_GRAFT_FUZZ_FRAMES=96 pytest fuzz)
@@ -24,8 +24,8 @@ the next; a stage failing does not stop the rest.  Usage:
 
 --quick skips pytest (stages 1-6 only, ~25 min); --soak adds the 96-seed
 fuzz soak (stage 8, ~40 min extra); --full adds the partition-invariance
-and AQE-invariance sweeps (each re-runs the registry twice).  Exit 0
-only if every ran stage passed.
+and AQE-invariance sweeps (tools/invariance.py --conf; each re-runs the
+registry twice).  Exit 0 only if every ran stage passed.
 """
 
 from __future__ import annotations
@@ -70,12 +70,13 @@ def main() -> int:
         ("empty sweep", [py, "tools/check.py", "--empty", sf], None),
         ("single-row sweep", [py, "tools/check.py", "--single", sf], None),
         ("all-null sweep", [py, "tools/check.py", "--allnull", sf], None),
-        ("determinism", [py, "tools/determinism.py", sf], None),
+        ("determinism", [py, "tools/invariance.py", sf], None),
         ("plan audit", [py, "tools/audit_plans.py", sf], None),
     ]
     if full:
-        stages.append(("partition invariance", [py, "tools/partition_invariance.py", sf], None))
-        stages.append(("AQE invariance", [py, "tools/engine_invariance.py", sf], None))
+        inv = [py, "tools/invariance.py", "--conf"]
+        stages.append(("partition invariance", inv + ["spark.sql.shuffle.partitions=32,7", sf], None))
+        stages.append(("AQE invariance", inv + ["spark.sql.adaptive.enabled=true,false", sf], None))
     if not quick:
         stages.append(("pytest", [py, "-m", "pytest", "tests/", "-q", "--tb=line"], None))
     if soak:
