@@ -629,7 +629,9 @@ def connected_components(
                 # alternate two spill paths: round r only reads round r-1
                 path = f"{spill}/r{rnd % 2}"
                 staged.write.mode("overwrite").parquet(path)
-                staged = spark.read.parquet(path)
+                # the schema is known: re-reading with it skips the
+                # inference job a bare read starts every round
+                staged = spark.read.schema(staged.schema).parquet(path)
             changed = staged.filter(F.col("__chg")).limit(1).count()
             labels = staged.drop("__chg")
             if changed == 0:

@@ -111,6 +111,20 @@ def _cpus() -> int:
         return os.cpu_count() or 8
 
 
+def _driver_mem() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else the smaller of
+    32g and half the host's physical RAM, so a local driver cannot outgrow
+    a small machine (a 32g heap on a 15 GB host got the JVM OOM-killed)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{min(32 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "polars_spark", **extra_conf: str) -> SparkSession:
     """Return (creating if needed) the process-wide SparkSession."""
     cpus = _cpus()
@@ -136,7 +150,7 @@ def get_spark(app_name: str = "polars_spark", **extra_conf: str) -> SparkSession
         .config("spark.sql.caseSensitive", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         # managed-table warehouse (bucketed tables) outside the repo tree
         .config(

@@ -3,7 +3,11 @@
 Reference: py-polars/src/polars/io/ (scan_parquet io/parquet/functions.py:467,
 scan_csv io/csv/functions.py:1107, scan_ndjson, read_json).  Every scan maps
 to ``spark.read`` so projection/predicate pushdown, partition pruning and
-schema merging come from the DataSource V2 machinery for free.
+schema merging come from the DataSource V2 machinery for free.  A parquet
+scan of local files passes Spark the schema built from the footers it has
+already read on the driver, so planning it starts no Spark job; Spark
+infers the schema (one job) only for directories, globs, hive layouts,
+remote URIs, mergeSchema scans, files that disagree and unmapped types.
 
 Scale notes: multi-file globs, hive-partitioned layouts and
 ``include_file_paths`` (-> input_file_name) are native; scans never
@@ -13,6 +17,7 @@ materialize on the driver.
 from __future__ import annotations
 
 import builtins
+import json
 
 from collections.abc import Sequence
 
@@ -148,38 +153,188 @@ def _order_struct(paths: Sequence[str], fname, block, pos):
     )
 
 
-def _nanos_ts_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as long
-    (spark.sql.legacy.parquet.nanosAsLong); we restore timestamps at µs
-    precision (truncating, same as DuckDB/polars ns->µs cast).
+def _first_parquet_file(path: str) -> str:
+    """The file whose footer stands for ``path``: a file or a remote URI is
+    itself, a glob is its first hit in sorted order, and a directory (a
+    Spark sink or a hive layout) is its first ``*.parquet`` at any depth in
+    sorted order, skipping the ``_``/``.``-prefixed names Spark's own
+    listing skips.  All files of one dataset share a writer and schema, so
+    the same data surfaces identically however its path is spelled."""
+    import glob as _glob
+    import os
 
-    Globs and directories are resolved to a concrete first file before the
-    schema probe (all files of one dataset share a writer/schema), so the
-    same data surfaces identically however the path is spelled."""
-    try:
-        import glob as _glob
-        import os
-
-        import pyarrow.parquet as pq
-        import pyarrow.types as pt
-
-        p = path
-        if any(ch in p for ch in "*?["):
-            matches = sorted(_glob.glob(p))
-            if not matches:
-                return []
-            p = matches[0]
-        if os.path.isdir(p):
-            hits = sorted(_glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
-            if not hits:
-                return []
-            p = hits[0]
-        schema = pq.read_schema(p)
-        return [
-            f.name for f in schema if pt.is_timestamp(f.type) and f.type.unit == "ns"
+    p = path
+    if "://" not in p and any(ch in p for ch in "*?["):
+        hits = sorted(_glob.glob(p))
+        if not hits:
+            raise FileNotFoundError(f"no file matches {path!r}")
+        p = hits[0]
+    if os.path.isdir(p):
+        parts = [
+            h
+            for h in sorted(_glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
+            if not any(c.startswith(("_", ".")) for c in os.path.relpath(h, p).split(os.sep))
         ]
+        if not parts:
+            raise FileNotFoundError(f"no parquet part files under {path!r}")
+        p = parts[0]
+    return p
+
+
+class _Unmapped(Exception):
+    """A parquet type whose Spark type this module leaves to Spark."""
+
+
+def _spark_type(col, ntz: bool, nanos_as_long: bool, binary_as_string: bool):
+    """The Spark type of one parquet leaf column, as Spark's
+    ``ParquetToSparkSchemaConverter.convertPrimitiveField`` maps it under the
+    three confs that change it.  Raises ``_Unmapped`` for everything else
+    (INT96, FLOAT16, TIME, JSON/ENUM/BSON/UUID, decimals above 38 digits)."""
+    from pyspark.sql import types as T
+
+    phys, lt = col.physical_type, json.loads(col.logical_type.to_json())
+    kind = lt["Type"]
+    if kind == "None":
+        if phys == "BYTE_ARRAY":
+            return T.StringType() if binary_as_string else T.BinaryType()
+        simple = {
+            "BOOLEAN": T.BooleanType,
+            "INT32": T.IntegerType,
+            "INT64": T.LongType,
+            "FLOAT": T.FloatType,
+            "DOUBLE": T.DoubleType,
+            "FIXED_LEN_BYTE_ARRAY": T.BinaryType,
+        }.get(phys)
+        if simple is not None:
+            return simple()
+    elif kind == "Int" and phys in ("INT32", "INT64"):
+        signed = {8: T.ByteType, 16: T.ShortType, 32: T.IntegerType, 64: T.LongType}
+        unsigned = {8: T.ShortType, 16: T.IntegerType, 32: T.LongType, 64: lambda: T.DecimalType(20, 0)}
+        return (signed if lt["isSigned"] else unsigned)[lt["bitWidth"]]()
+    elif kind == "Decimal" and lt["precision"] <= 38:
+        return T.DecimalType(lt["precision"], lt["scale"])
+    elif kind == "Date" and phys == "INT32":
+        return T.DateType()
+    elif kind == "String" and phys == "BYTE_ARRAY":
+        return T.StringType()
+    elif kind == "Timestamp" and phys == "INT64":
+        if lt["timeUnit"] == "nanoseconds":
+            if nanos_as_long:
+                return T.LongType()
+        elif lt["isAdjustedToUTC"] or not ntz:
+            return T.TimestampType()
+        else:
+            return T.TimestampNTZType()
+    raise _Unmapped(f"{col.path}: {phys} {kind}")
+
+
+def _footer_schema(md, ntz: bool, nanos_as_long: bool, binary_as_string: bool):
+    """The StructType Spark's parquet schema inference gives for the file
+    with footer ``md``, or None where inference must decide: a footer that
+    carries Spark's own row schema, duplicate column names, or any type
+    ``_spark_type`` does not map.  The nesting follows the footer's Arrow
+    schema; every parquet leaf is checked against the path and repetition
+    level a standard three-level LIST / MAP layout gives it, so a legacy
+    two-level list (which Spark and Arrow may nest differently) falls back.
+    Every field is nullable: Spark makes a file source's schema nullable
+    whether it was inferred or given."""
+    import pyarrow.types as pt
+    from pyspark.sql import types as T
+
+    if b"org.apache.spark.sql.parquet.row.metadata" in (md.metadata or {}):
+        return None
+    leaves = [md.schema.column(i) for i in range(md.num_columns)]
+    pos = 0
+
+    def leaf(path, reps):
+        nonlocal pos
+        col = leaves[pos]
+        if col.path != ".".join(path) or col.max_repetition_level != reps:
+            raise _Unmapped(f"{col.path}: unexpected nesting")
+        pos += 1
+        return _spark_type(col, ntz, nanos_as_long, binary_as_string)
+
+    def convert(t, path, reps):
+        if pt.is_struct(t):
+            if t.num_fields == 0:
+                raise _Unmapped(f"{'.'.join(path)}: empty struct")
+            return T.StructType(
+                [T.StructField(f.name, convert(f.type, [*path, f.name], reps)) for f in t]
+            )
+        if pt.is_list(t) or pt.is_large_list(t) or pt.is_fixed_size_list(t):
+            elem = convert(t.value_type, [*path, "list", t.value_field.name], reps + 1)
+            return T.ArrayType(elem)
+        if pt.is_map(t):
+            # the key/value group's name is free; read it off the next leaf
+            group = leaves[pos].path.split(".")[builtins.len(path)]
+            key = convert(t.key_type, [*path, group, t.key_field.name], reps + 1)
+            return T.MapType(key, convert(t.item_type, [*path, group, t.item_field.name], reps + 1))
+        return leaf(path, reps)
+
+    try:
+        arrow = md.schema.to_arrow_schema()
+        names = [f.name for f in arrow]
+        if builtins.len({n.lower() for n in names}) != builtins.len(names):
+            return None
+        fields = [T.StructField(f.name, convert(f.type, [f.name], 0)) for f in arrow]
+    except (_Unmapped, IndexError, KeyError):
+        return None
+    return T.StructType(fields) if pos == builtins.len(leaves) else None
+
+
+def _scan_footers(spark: SparkSession, paths: Sequence[str], infer: bool):
+    """Read each scanned file's parquet footer once, on the driver.
+    Returns ``(schema, ns_cols)``: the top-level columns stored as
+    TIMESTAMP(NANOS) in the first footer, and the Spark schema of the scan
+    (see ``_footer_schema``) or None to let Spark infer it.  Inference
+    stays with Spark when ``infer`` is set (mergeSchema), when a path is
+    not an existing local regular file (a directory, glob, hive layout or
+    remote URI), and when the files of a list disagree.
+
+    Spark reads TIMESTAMP(NANOS) parquet only as long
+    (``spark.sql.legacy.parquet.nanosAsLong``), so that conf is switched on
+    when the data needs it; the scan restores those columns as µs
+    timestamps."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.read_metadata(_first_parquet_file(paths[0]))
+        top = {f.name for f in md.schema.to_arrow_schema()}
     except Exception:
-        return []
+        return None, []
+    ns_cols = [
+        col.path
+        for col in map(md.schema.column, range(md.num_columns))
+        if col.path in top
+        and col.logical_type.type == "TIMESTAMP"
+        and json.loads(col.logical_type.to_json())["timeUnit"] == "nanoseconds"
+    ]
+    conf = spark.conf
+    if ns_cols and conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
+        # only mutate session state when the data actually needs it (Spark
+        # refuses TIMESTAMP(NANOS) parquet without this legacy flag)
+        conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    local = ("://" not in p and not any(ch in p for ch in "*?[") and os.path.isfile(p) for p in paths)
+    if infer or not all(local):
+        return None, ns_cols
+    try:
+        footers = [md, *(pq.read_metadata(p) for p in paths[1:])]
+    except Exception:
+        return None, ns_cols
+    flags = [
+        conf.get(k) == "true"
+        for k in (
+            "spark.sql.parquet.inferTimestampNTZ.enabled",
+            "spark.sql.legacy.parquet.nanosAsLong",
+            "spark.sql.parquet.binaryAsString",
+        )
+    ]
+    schemas = [_footer_schema(f, *flags) for f in footers]
+    if schemas[0] is None or any(s != schemas[0] for s in schemas[1:]):
+        return None, ns_cols
+    return schemas[0], ns_cols
 
 
 def scan_parquet(
@@ -196,7 +351,14 @@ def scan_parquet(
     spark: SparkSession | None = None,
     **_compat,
 ) -> LazyFrame:
-    """``allow_missing_columns`` / ``missing_columns='insert'`` turn on
+    """The schema comes from the parquet footers, read once on the driver,
+    when every path is an existing local file whose types map the way
+    Spark's own inference maps them; the scan then starts no Spark job.
+    Otherwise (a directory, glob, hive layout or remote URI, files whose
+    schemas differ, an unmapped type such as INT96 or TIME, or a
+    mergeSchema scan) Spark infers the schema, which costs one job.
+
+    ``allow_missing_columns`` / ``missing_columns='insert'`` turn on
     Spark's mergeSchema scan (files with differing schemas union by name,
     absent columns null-filled — polars UnifiedScanArgs policies,
     dsl/plan.rs:47).  ``n_rows`` is a limit (slice pushdown: Spark's
@@ -206,14 +368,13 @@ def scan_parquet(
     memory-layout knobs to honor."""
     spark = _spark(spark)
     paths = [str(source)] if isinstance(source, str) or hasattr(source, '__fspath__') else [str(s) for s in source]
-    ns_cols = _nanos_ts_cols(paths[0])
-    if ns_cols and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        # only mutate session state when the data actually needs it (Spark
-        # refuses TIMESTAMP(NANOS) parquet without this legacy flag)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    merge = allow_missing_columns or missing_columns == "insert"
+    schema, ns_cols = _scan_footers(spark, paths, infer=merge)
     r = spark.read
-    if allow_missing_columns or missing_columns == "insert":
+    if merge:
         r = r.option("mergeSchema", True)
+    elif schema is not None:
+        r = r.schema(schema)
     from polars_spark.exceptions import translate_errors
 
     with translate_errors():
@@ -1877,26 +2038,10 @@ def read_lines(path, **kw) -> LazyFrame:
     return scan_lines(path, **kw)
 
 
-def _first_parquet_file(path: str) -> str:
-    """Spark sinks write a DIRECTORY of part files; footer readers want a
-    file — resolve to the first part inside."""
-    import glob as _glob
-    import os
-
-    if os.path.isdir(path):
-        parts = sorted(_glob.glob(os.path.join(path, "*.parquet"))) or sorted(
-            _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        if not parts:
-            raise FileNotFoundError(f"no parquet part files under {path!r}")
-        return parts[0]
-    return path
-
-
 def read_parquet_schema(path: str) -> dict:
     """Column -> dtype string, read from footer metadata only (pyarrow,
-    no data scan; reference io/parquet read_parquet_schema).  Directory
-    sinks resolve to their first part file."""
+    no data scan; reference io/parquet read_parquet_schema).  Globs and
+    directories resolve to their first file as in ``scan_parquet``."""
     import pyarrow.parquet as pq
 
     sch = pq.read_schema(_first_parquet_file(path))

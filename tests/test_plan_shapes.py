@@ -93,3 +93,38 @@ def test_join_strategies(plans, name):
     _max, allowed = PINS[name]
     got = {j for j in JOINS if j in plans[name]}
     assert got <= allowed, f"{name}: unexpected join strategies {got - allowed}"
+
+
+# query -> ceiling on the Spark jobs one build + noop write starts, at the
+# test session's confs (shuffle.partitions=1, AQE off), pinned exact.  A
+# scan_parquet of a local file passes Spark the footer schema and starts no
+# job; a scan that fell back to schema inference would add one job per scan
+# (q5 makes six).
+JOB_PINS = {
+    "q1_pricing_summary": 1,
+    "q5_local_supplier_volume": 5,
+    "q6_forecast_revenue": 1,
+    "join_asof_backward": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_PINS))
+def test_job_ceiling(spark, name):
+    import uuid
+
+    from polars_spark.queries import QUERIES
+
+    s = spark.newSession()
+    s.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"job-ceiling-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](s, SF_DIR).write.format("noop").mode("overwrite").save()
+        got = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got <= JOB_PINS[name], (
+        f"{name}: {got} jobs > pinned ceiling {JOB_PINS[name]} — a new eager "
+        "job or an inferring scan entered the query; justify and re-pin or fix"
+    )
