@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import decimal
 import glob
+import os
 import uuid
 
 import pyarrow as pa
@@ -17,8 +18,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from polars_spark.sources import _first_parquet_file, _scan_footers
+from tests.test_llm_ops import SF_DIR
 
-TESTDATA = sorted(glob.glob("/root/testdata/sf*/*.parquet"))
+# every table at every SF of the test data (TESTDATA.md)
+TESTDATA = sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "*.parquet")))
 
 
 @contextlib.contextmanager
@@ -185,8 +188,6 @@ def test_one_resolver_for_globs_and_directories(pl, lf, tmp_path):
 
 
 def test_driver_mem_default(monkeypatch):
-    import os
-
     from polars_spark import session
 
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
