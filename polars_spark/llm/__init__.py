@@ -19,7 +19,10 @@ ingest and tokenization.  Design rules applied throughout:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,6 +69,41 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *cols) if cols else df.repartition(target)
     return df
+
+
+@contextmanager
+def _job(tag: str):
+    """Describe the Spark jobs the block starts as ``tag`` (``operator:phase``)
+    and give the caller's description back after, also on error.  The job
+    group is left alone, so callers that group jobs still count these."""
+    sc = SparkContext.getOrCreate()
+    saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(tag)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", saved)
+
+
+def _materialize(df: DataFrame, tag: str) -> DataFrame:
+    """``df`` run once, now, into an in-memory RDD leaf, by jobs named
+    ``tag``: the engine's one eager checkpoint.  Only the plan boundary
+    moves; rows and floats are identical.
+
+    Why a leaf: where a subtree has several consumers (both self-join
+    sides, an aggregate plus a back-join), AQE materializes each consumer's
+    stages on their own, re-running the subtree per stage, and a
+    BroadcastExchange can never reuse the probe side's stages.  A
+    ``cache()`` plan is re-analyzed by every query built on it (cache
+    substitution follows analysis), which a loop pays every round; a leaf
+    is not.  A checkpoint does no shuffle, so the leaf keeps ``df``'s
+    partitioning: spread or repartition before it.  What it gives up is
+    lineage: the blocks live only in executor memory, so a lost executor
+    fails the jobs that read the leaf instead of recomputing it, and the
+    checkpoint job names its operator.  The ContextCleaner frees the blocks
+    once the driver garbage-collects the frame."""
+    with _job(tag):
+        return df.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -151,13 +189,8 @@ def ngram_jaccard_pairs(
     if max_df is not None:
         dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         sh = sh.join(dfreq.filter(F.col("df") <= max_df), "sh")
-    # Three consumers read the exploded postings (both self-join sides and
-    # the per-doc size aggregate), and AQE materializes each one's stages
-    # independently — the shingle explode otherwise runs three times.  The
-    # eager localCheckpoint runs it once into an RDD leaf (r13, same
-    # transform as the minhash/embedding/tfidf dedups); the stored rows
-    # are the same (doc, shingle) postings the self-join shuffles anyway.
-    sh = sh.localCheckpoint(eager=True)
+    # three consumers: both self-join sides and the per-doc size aggregate
+    sh = _materialize(sh, "ngram_jaccard_pairs:postings")
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc").alias("d1"), "sh")
     b = sh.select(F.col("doc").alias("d2"), "sh")
@@ -260,24 +293,15 @@ def _banded_corpus(
     20.1s.  Callers cycling many corpora through one session can
     clearCache().
 
-    banded, the (doc, band) rows, is eagerly localCheckpointed (r13; was
-    cache() in r12).  The k-hash signature pass, the dominant per-row cost,
-    has two consumers (both join sides, or the per-band representative
-    aggregate and the star probe), and AQE materializes each consumer's
-    stages independently, re-running the signatures per stage (r12
-    event-log probe: the same 32-hash pass in 4+ concurrent stages).
-    Unlike a cache, the RDD leaf is not re-analyzed by every downstream
-    query and cannot be raced on.  A checkpoint does no shuffle, so it keeps
+    banded, the slim (doc, band) rows, is materialized: the k-hash signature
+    pass, the dominant per-row cost, has two consumers (both join sides, or
+    the per-band representative aggregate and the star probe).  It keeps
     the uniform _spread partitioning: a repartition on band concentrates
     each mega-duplicate cluster's pair or star-edge generation in one task
-    (r12: 1.8s -> 7s for pairs, 2.8s -> 37.8s for the star).  The rows are
-    slim, bands x corpus rows; each call's checkpoint is freed once the
-    driver JVM garbage-collects its last reference."""
+    (r12: 1.8s -> 7s for pairs, 2.8s -> 37.8s for the star)."""
     base = _shingle_sets(df, id_col, text_col, n).cache()
-    banded = base.select(
-        "doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band")
-    ).localCheckpoint(eager=True)
-    return base, banded
+    banded = base.select("doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band"))
+    return base, _materialize(banded, "minhash_lsh:banded")
 
 
 def _verified_pairs(cand: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
@@ -441,43 +465,26 @@ def connected_components(
     materialization.  Raises if max_iter rounds pass without a fixed point
     rather than returning silently-wrong labels.
 
-    Iteration discipline (round 11, jstack-diagnosed): per-round
-    ``localCheckpoint`` is NOT enough here.  A checkpoint snapshots the
-    plan's ESTIMATED statistics, and the label self-join SQUARES the
-    ``sizeInBytes`` BigInt every round — its digit count doubles per round
-    and Catalyst ends up in million-digit ``BigInteger.multiply``
-    (Karatsuba, ~4x wall per round; round 13 of a 5000-path took 130 s of
-    pure driver CPU while the executed plan stayed a constant-size
-    SortMergeJoin over 5000 rows).  Reliable ``checkpoint()`` and
-    constraint-propagation-off reproduce it identically.  Writing each
-    round to parquet and reading it back resets statistics to the ACTUAL
-    file size, keeps planning O(1) per round (measured flat 1 s/round to
-    convergence), and is the cluster-safe pattern anyway (the spill dir is
-    ``checkpoint_dir``, the SparkContext checkpoint dir, or a local temp
-    dir, in that order — point it at shared storage on a real cluster).
-    The returned labels are localCheckpoint-materialized once at the end
-    (no chain, no compounding) so the spill dir can be deleted.
+    Rounds before ``spill_after`` are checkpointed (``_materialize``); later
+    rounds are written to parquet and read back.  A checkpoint keeps the
+    plan's ESTIMATED statistics, and the label self-join squares the
+    ``sizeInBytes`` BigInt every round (~20*2^r digits at round r), so deep
+    components end in million-digit ``BigInteger.multiply`` on the driver
+    (round 11, jstack: round 13 of a 5000-path took 130 s of driver CPU; a
+    reliable ``checkpoint()`` does the same).  The re-read resets the
+    statistics to the actual file size (flat ~1 s/round), while shallow
+    components, the common case (LSH clusters converge in 2-4 rounds), pay
+    no spill I/O.  The spill dir is ``checkpoint_dir``, the SparkContext
+    checkpoint dir, or a local temp dir, in that order (point it at shared
+    storage on a cluster); spilled labels are checkpointed once at the end
+    so it can be deleted.
 
-    The spill is ADAPTIVE (``spill_after``): the first rounds use plain
-    localCheckpoint — the stats BigInt at round r has ~20*2^r digits, so
-    multiplies are microseconds until r ~ 10 — and the parquet spill only
-    kicks in from round ``spill_after``.  Tiny near-dup components (the
-    overwhelmingly common case: LSH clusters converge in 2-4 rounds) pay
-    ZERO spill I/O; only genuinely deep components reach the spill regime,
-    exactly where it is essential.
-
-    The pointer jump is adaptive too (``jump_after``, round 12): the
-    label-of-label self-join is skipped while rounds are young.  This is
-    safe, not just fast: a fixed point of plain neighbor-min propagation
-    IS full convergence (at a fixed point, any node adjacent to the
-    min-labelled set would still change — so by connectivity every node
-    already carries the component min; the jump only ACCELERATES deep
-    components, it never changes the fixed point), and the convergence
-    test + max_iter raise are unchanged.  Shallow components — the
-    overwhelmingly common case; LSH star clusters converge in 2-3 rounds
-    — therefore never pay the self-join at all, while a deep component
-    engages jumping from round ``jump_after`` and still converges in
-    ~jump_after + log2(diameter) rounds."""
+    The pointer jump is skipped before round ``jump_after`` (round 12).
+    That is safe: a fixed point of plain neighbor-min propagation IS full
+    convergence (any node next to the min-labelled set would still change,
+    so by connectivity every node carries the component min); the jump only
+    accelerates deep components, which converge in ~jump_after +
+    log2(diameter) rounds, while shallow ones never pay the self-join."""
     import shutil
     import tempfile
     import uuid
@@ -502,21 +509,14 @@ def connected_components(
         .distinct()
         .cache()
     )
-    # Round-12 small-graph fast path: every distributed round of the loop
-    # below costs a fixed multi-stage latency (two keyed shuffles + a
-    # checkpoint job + a convergence count) — ~1.5s/round on an idle
-    # local[32], i.e. ~5s for a 247-edge graph (the sf0.1 bench shape).
-    # When the deduplicated edge list is PROVABLY small (one count on the
-    # cached edges, <= driver_solve_max rows — a bounded collect by
-    # construction, <= ~16 bytes/edge plus Python overhead at the 200k
-    # default, well under any driver budget), union-find at the driver
-    # computes the identical min-label components in milliseconds.  The
-    # label set is unique per graph, so the two paths are exchangeable —
-    # pinned by tests/test_round11_cc_giant_component.py which runs BOTH
-    # and compares.  At scale the count exceeds the cap and the
-    # distributed pointer-jump loop runs exactly as before; the cap is a
-    # parameter, not a config lie: its default is chosen for driver-RAM
-    # safety, not for this box.
+    # Round-12 small-graph fast path: every distributed round below costs a
+    # fixed multi-stage latency (~1.5s/round on an idle local[32], ~5s for
+    # the 247-edge sf0.1 bench graph).  When the edge list has at most
+    # driver_solve_max rows (a bounded collect: <= ~16 bytes/edge plus
+    # Python overhead at the 200k default), union-find at the driver gives
+    # the identical min-label components in milliseconds; the label set is
+    # unique per graph, and tests/test_round11_cc_giant_component.py runs
+    # both paths and compares them.
     base = spill = None
     own_dir = False
     try:
@@ -525,18 +525,17 @@ def connected_components(
             # edge set (r13, ADVICE r12): when the limit covers all edges the
             # null flag is exact, so a null-edged graph skips straight to the
             # distributed loop without a wasted full collect
-            probe = (
-                edges.limit(driver_solve_max + 1)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(F.col("u").isNull() | F.col("v").isNull()).alias("has_null"),
-                )
-                .first()
+            probe = edges.limit(driver_solve_max + 1).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.col("u").isNull() | F.col("v").isNull()).alias("has_null"),
             )
+            with _job("connected_components:size_probe"):
+                probe = probe.first()
             # null endpoints would need the loop's null-equality semantics —
             # the probe's has_null flag routes them there WITHOUT collecting
             if probe["n"] <= driver_solve_max and not probe["has_null"]:
-                rows = edges.collect()
+                with _job("connected_components:edges"):
+                    rows = edges.collect()
                 parent: dict = {}
 
                 def find(x):
@@ -617,8 +616,8 @@ def connected_components(
             )
             if rnd < spill_after:
                 # early rounds: the stats BigInt is still small — a plain
-                # eager localCheckpoint is cheaper than file I/O
-                staged = staged.localCheckpoint(eager=True)
+                # eager checkpoint is cheaper than file I/O
+                staged = _materialize(staged, "connected_components:round")
             else:
                 if spill is None:
                     base = checkpoint_dir or spark.sparkContext.getCheckpointDir()
@@ -628,11 +627,13 @@ def connected_components(
                     spill = f"{base.rstrip('/')}/cc_{uuid.uuid4().hex[:12]}"
                 # alternate two spill paths: round r only reads round r-1
                 path = f"{spill}/r{rnd % 2}"
-                staged.write.mode("overwrite").parquet(path)
+                with _job("connected_components:spill"):
+                    staged.write.mode("overwrite").parquet(path)
                 # the schema is known: re-reading with it skips the
                 # inference job a bare read starts every round
                 staged = spark.read.schema(staged.schema).parquet(path)
-            changed = staged.filter(F.col("__chg")).limit(1).count()
+            with _job("connected_components:converged"):
+                changed = staged.filter(F.col("__chg")).limit(1).count()
             labels = staged.drop("__chg")
             if changed == 0:
                 converged = True
@@ -645,7 +646,7 @@ def connected_components(
         if spill is not None:
             # materialize off the spill files so the dir can be removed;
             # one terminal checkpoint has nothing to compound with
-            labels = labels.localCheckpoint(eager=True)
+            labels = _materialize(labels, "connected_components:labels")
     finally:
         if spill is not None:
             target = base if own_dir else spill
@@ -735,15 +736,9 @@ def simhash_near_pairs(
             for i in range(4)
         ]
     )
-    # Both self-join sides read the chunked signatures, and the signature
-    # pass is a PYTHON (mapInPandas) per-doc hashing stage — without
-    # materialization it runs once per side (AQE broadcasts one side, which
-    # can never reuse the probe side's stages).  The eager localCheckpoint
-    # runs the Python pass once into an RDD leaf (r13); the stored rows are
-    # four slim (doc, simhash, ci, cv) longs per doc.
-    e = sig.select(
-        "doc", "simhash", F.posexplode(chunks).alias("ci", "cv")
-    ).localCheckpoint(eager=True)
+    # both self-join sides read the Python (mapInPandas) signature pass
+    e = sig.select("doc", "simhash", F.posexplode(chunks).alias("ci", "cv"))
+    e = _materialize(e, "simhash_near_pairs:chunks")
     a = e.select(F.col("doc").alias("d1"), F.col("simhash").alias("s1"), "ci", "cv")
     b = e.select(F.col("doc").alias("d2"), F.col("simhash").alias("s2"), "ci", "cv")
     cand = a.join(b, ["ci", "cv"]).filter(F.col("d1") < F.col("d2")).dropDuplicates(["d1", "d2"])
@@ -1086,24 +1081,10 @@ def embedding_near_dup_pairs(
     # all the pair-generation work.  An explicit repartition survives AQE
     # and keeps pair generation spread across the cluster.
     par = emb.sparkSession.sparkContext.defaultParallelism
-    # The (id, bucket) frame is localCheckpointed (r13, guide §3.3/§5): the
-    # self-join needs it TWICE, and no plan shape makes Catalyst compute it
-    # once — the r12 session measured alias-order/shuffle_hash/cache
-    # variants and every FINAL adaptive plan held two copies of the
-    # hyperplane subtree (AQE broadcasts one side, and a BroadcastExchange
-    # can never reuse the probe side's hash Exchange; the variants measured
-    # 4.6-6.1s vs 3.5s for the alias-then-repartition shape at sf0.1).  The
-    # eager checkpoint materializes the bucket pass ONCE into an RDD leaf
-    # that both sides (and both their exchanges) read — the scan, the
-    # normalize/hyperplane HOF evaluation, and their analysis cost drop out
-    # of the join subtrees entirely.  The stored rows are slim (id, bucket
-    # long) = n_tables x corpus rows, the same bytes the band shuffle
-    # itself moves, so the block-manager footprint scales exactly like the
-    # shuffle this join already pays.  Values are identical: only the plan
-    # boundary moves, not any row or float.
-    keyed = c.select("_id", F.explode(F.array(*tbs)).alias("tb")).localCheckpoint(
-        eager=True
-    )
+    # both self-join sides read the hyperplane bucket pass; the slim
+    # (id, bucket) rows are n_tables x corpus rows, what the join shuffles
+    keyed = c.select("_id", F.explode(F.array(*tbs)).alias("tb"))
+    keyed = _materialize(keyed, "embedding_near_dup_pairs:buckets")
     a = keyed.select(F.col("_id").alias("d1"), "tb").repartition(par, "tb")
     b = keyed.select(F.col("_id").alias("d2"), "tb").repartition(par, "tb")
     cand = (
@@ -1285,17 +1266,10 @@ def _spherical_kmeans(
     # null embeddings normalize to null and carry no geometry — drop them
     # before seeding/assignment (an all-null corpus degenerates cleanly)
     corpus = corpus.where(F.col("nv").isNotNull())
-    # localCheckpoint, not cache (r13, guide §1/§5): the Lloyd loop below
-    # plans ONE new query per round on top of `corpus`, and with cache the
-    # analyzer/optimizer re-walk the whole scan + normalize-HOF subtree
-    # every round (cache substitution happens after analysis) — the r12
-    # event-log probe put ~3.1s of sim_ivf_topk's 3.8s in exactly these
-    # sequential planning gaps.  The eager checkpoint truncates the lineage
-    # to an RDD leaf: same bytes stored as the cache held, every per-round
-    # plan now analyzes a leaf + the constant assignment tree.  Values are
-    # identical (same rows, same floats — only the plan boundary moves).
-    corpus = corpus.localCheckpoint(eager=True)
-    init = corpus.orderBy("nid").limit(n_clusters).select("nv").collect()
+    # the Lloyd loop below plans one new query per round on top of corpus
+    corpus = _materialize(corpus, "spherical_kmeans:corpus")
+    with _job("spherical_kmeans:init"):
+        init = corpus.orderBy("nid").limit(n_clusters).select("nv").collect()
     cents = [[_fround_py(float(x), 10) for x in r.nv] for r in init]
     if not cents:
         # empty corpus: one degenerate centroid keeps every downstream
@@ -1315,9 +1289,10 @@ def _spherical_kmeans(
         # whole dim-wide aggregate (the agg-per-column Column form cost
         # ~0.3-1s of driver time per round, r13 phase probe); avg(nv[d])
         # parses to the same 0-based getItem + Average the Column form built
-        rows = spark.sql(
-            f"SELECT cid, {avg_cols} FROM {{src}} GROUP BY cid", src=assigned
-        ).collect()
+        with _job("spherical_kmeans:round"):
+            rows = spark.sql(
+                f"SELECT cid, {avg_cols} FROM {{src}} GROUP BY cid", src=assigned
+            ).collect()
         new = {}
         for r in rows:
             raw = [float(r[f"m{d}"]) for d in range(dim)]
@@ -1553,10 +1528,8 @@ def duplicated_spans(
     from pyspark.sql import Window
 
     # _spread: a single-split corpus would run the positioned-gram explode
-    # on one core; the eager checkpoint then runs it ONCE for its two
-    # consumers (the gram counts and the coverage back-join) — the same
-    # shared-subtree materialization as the other dedup operators (r13;
-    # the probe showed two parallel single-task 1.3s explode stages).
+    # on one core; two consumers read it: the gram counts and the coverage
+    # back-join
     occ = (
         _spread(df)
         .select(
@@ -1564,8 +1537,8 @@ def duplicated_spans(
             F.posexplode(word_ngrams(F.col(text_col), n)).alias("pos0", "gram"),
         )
         .select(F.col(id_col), (F.col("pos0") + 1).alias("pos"), "gram")
-        .localCheckpoint(eager=True)
     )
+    occ = _materialize(occ, "duplicated_spans:grams")
     dup = occ.groupBy("gram").agg(F.count(F.lit(1)).alias("n_occ")).where(F.col("n_occ") >= 2)
     covered = (
         occ.join(dup.select("gram"), "gram")
@@ -1822,19 +1795,14 @@ def fuzzy_string_pairs(
         # idx and probe each have THREE consumers (the hot-block count, the
         # cold route's anti join, the hot route's semi join), and probe is
         # the expensive one — a triple explode emitting O(k^3) keys per
-        # string.  Without materialization AQE plans and runs each
-        # consumer's copy of the subtree independently (same pattern as
-        # the minhash/embedding/tfidf dedups).  The eager localCheckpoints
-        # run each expansion ONCE into an RDD leaf; the stored rows are
-        # the same slim key postings the blocking join shuffles anyway.
-        # The round-robin respread matters: AQE coalesces the upstream
-        # distinct to 1-2 partitions (the inputs are slim), but every
-        # DOWNSTREAM stage — including the quadratic pair-generation joins
-        # — inherits the leaf's partitioning (the event-log probe showed
-        # the verify stage running as 2 tasks, one a 3.7s straggler).
+        # string.  The round-robin respread matters: AQE coalesces the
+        # upstream distinct to 1-2 partitions (the inputs are slim), but
+        # every DOWNSTREAM stage — including the quadratic pair-generation
+        # joins — inherits the leaf's partitioning (the event-log probe
+        # showed the verify stage running as 2 tasks, one a 3.7s straggler).
         par = left.sparkSession.sparkContext.defaultParallelism
-        idx = idx.repartition(par).localCheckpoint(eager=True)
-        probe = probe.repartition(par).localCheckpoint(eager=True)
+        idx = _materialize(idx.repartition(par), "fuzzy_string_pairs:idx")
+        probe = _materialize(probe.repartition(par), "fuzzy_string_pairs:probe")
         keys = ["__L", "__i", "__key"]
         # skew guard: a block's JOIN OUTPUT is idx_count x probe_count —
         # low-entropy segments (shared prefixes) make single blocks
@@ -1851,11 +1819,9 @@ def fuzzy_string_pairs(
                 > F.lit(float(hot_pair_cap))
             )
             .select(*keys)
-            # four joins broadcast this tiny hot-key set (two anti, two
-            # semi) and each broadcast build otherwise re-runs the
-            # count-count join; the eager checkpoint computes it once
-            .localCheckpoint(eager=True)
         )
+        # four joins broadcast this tiny hot-key set (two anti, two semi)
+        hot = _materialize(hot, "fuzzy_string_pairs:hot")
         idx_cold = idx.join(F.broadcast(hot), keys, "left_anti")
         probe_cold = probe.join(F.broadcast(hot), keys, "left_anti")
         cand_cold = idx_cold.join(probe_cold, keys).select("s", "t")
@@ -2285,7 +2251,9 @@ def build_minhash_index(
     mode: str = "overwrite",
 ) -> None:
     """Persist the banded-LSH index of a corpus: one (doc, band_idx, band)
-    row per band, hive-partitioned parquet.  Build once per corpus
+    row per band, one Spark-written parquet directory with no partition
+    columns (so its footers carry Spark's row schema, which
+    dedup_against_index reads back).  Build once per corpus
     snapshot; every future crawl batch dedups against it WITHOUT
     re-shingling the existing corpus (the economics of incremental
     ingestion at 100 TB — the index is ~bands x 16 bytes/doc).  Shingle
@@ -2321,12 +2289,13 @@ def dedup_against_index(
     The existing corpus is never re-shingled or re-hashed; the join
     shuffles only the new batch's (doc, band) pairs plus matching index
     partitions."""
-    spark = new_df.sparkSession
+    from polars_spark.sources import _read_spark_written
+
     # _spread the index read too: a small index packs into ONE scan split,
     # and the band join + exact verify inherit that single partition (the
     # r13 event-log probe showed them as one 7.8s task); at real scale the
     # read has many splits and this is a no-op
-    idx = _spread(spark.read.parquet(index_path))
+    idx = _spread(_read_spark_written(new_df.sparkSession, index_path))
     base = _shingle_sets(new_df, id_col, text_col, n).toDF("nid", "nsh").cache()
     banded = base.select(
         "nid", F.explode(_band_keys(F.col("nsh"), k=k, bands=bands)).alias("band")
@@ -2498,17 +2467,9 @@ def tfidf_cosine_pairs(
     from pyspark.sql import Window as _W
 
     nrm = F.sqrt(F.sum(F.col("w") * F.col("w")).over(_W.partitionBy("doc")))
-    # The normalized postings feed both sides of the token self-join, and
-    # as in minhash_lsh_pairs/embedding_near_dup_pairs no Catalyst shape
-    # computes the subtree once (AQE broadcasts one side, whose
-    # BroadcastExchange cannot reuse the probe side's stages) — the whole
-    # tf/dfreq/doclen/window pipeline otherwise runs per side.  The eager
-    # localCheckpoint materializes the slim (token, doc, u) postings ONCE
-    # into an RDD leaf both sides read (r13; the r12 window-norm rewrite
-    # already halved the subtree this checkpoint now de-duplicates).
-    unit = w.select("token", "doc", (F.col("w") / nrm).alias("u")).localCheckpoint(
-        eager=True
-    )
+    # both sides of the token self-join read the normalized postings
+    unit = w.select("token", "doc", (F.col("w") / nrm).alias("u"))
+    unit = _materialize(unit, "tfidf_cosine_pairs:postings")
     a = unit.select(F.col("token"), F.col("doc").alias("d1"), F.col("u").alias("u1"))
     b = unit.select(F.col("token"), F.col("doc").alias("d2"), F.col("u").alias("u2"))
     pairs = (

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from polars_spark.llm import _job, _materialize
+
 __all__ = ["pagerank", "degree_stats"]
 
 
@@ -53,7 +55,8 @@ def pagerank(
         .distinct()
         .cache()
     )
-    n = nodes.count()  # one scalar to the driver — the only eager step
+    with _job("pagerank:nodes"):
+        n = nodes.count()  # one scalar to the driver — the only eager step
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     out_e = e.join(deg, "u")  # (u, v, deg) — static over iterations
     out_e = out_e.cache()
@@ -76,7 +79,7 @@ def pagerank(
             ).alias("rank"),
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = _materialize(ranks, "pagerank:ranks")
     return ranks
 
 

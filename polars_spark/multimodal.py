@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_spark.llm import _materialize
+
 __all__ = [
     "attach_fake_image_bytes",
     "image_ahash",
@@ -242,7 +244,7 @@ def image_ahash_pairs(
     (id, band) pairs — never pixels; the classic bucketed shape, same as
     simhash_near_pairs for text."""
     hashed = image_ahash(df, binary_col).select(F.col(id_col).alias("doc"), "b0", "b1", "b2", "b3")
-    hashed = hashed.cache()
+    hashed = _materialize(hashed, "image_ahash_pairs:hashes")  # eight join sides read it
     cands = None
     for k in range(4):
         a = hashed.select(F.col("doc").alias("d1"), F.col(f"b{k}").alias("bk"))

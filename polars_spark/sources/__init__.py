@@ -282,6 +282,28 @@ def _footer_schema(md, ntz: bool, nanos_as_long: bool, binary_as_string: bool):
     return T.StructType(fields) if pos == builtins.len(leaves) else None
 
 
+def _read_spark_written(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)``, minus the inference job where ``path``
+    is local unpartitioned data Spark wrote: the row schema that write
+    stored in the footer is the schema Spark would infer."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    reader = spark.read
+    if "://" not in path:
+        try:
+            first = _first_parquet_file(path)
+            if "=" not in os.path.relpath(first, path):  # no hive partition columns
+                meta = pq.read_metadata(first).metadata or {}
+                row = meta[b"org.apache.spark.sql.parquet.row.metadata"]
+                reader = reader.schema(T.StructType.fromJson(json.loads(row)))
+        except (OSError, ValueError, KeyError):
+            pass
+    return reader.parquet(path)
+
+
 def _scan_footers(spark: SparkSession, paths: Sequence[str], infer: bool):
     """Read each scanned file's parquet footer once, on the driver.
     Returns ``(schema, ns_cols)``: the top-level columns stored as

@@ -421,7 +421,7 @@ def streaming_minhash_suppress(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState
 
-    from polars_spark.llm import _band_keys, _jaccard, _shingle_sets, shingles
+    from polars_spark.llm import _band_keys, _jaccard, _materialize, _shingle_sets, shingles
 
     banded = _shingle_sets(stream, id_col, text_col, n).select(
         "doc", F.explode(_band_keys(F.col("sh"), k=k, bands=bands)).alias("band")
@@ -467,7 +467,7 @@ def streaming_minhash_suppress(
     )
     # materialize the static side once (at scale this is the persisted
     # shingle table anyway); also keeps the broadcast build row-based
-    corpus_sh = corpus_sh.localCheckpoint(eager=True)
+    corpus_sh = _materialize(corpus_sh, "streaming_minhash_suppress:corpus")
     d_side = corpus_sh.select(F.col("__cid").alias("doc"), F.col("__csh").alias("dsh"))
     r_side = corpus_sh.select(F.col("__cid").alias("rep"), F.col("__csh").alias("rsh"))
     joined = cands.join(d_side, "doc").join(r_side, "rep")

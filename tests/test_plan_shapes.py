@@ -99,12 +99,16 @@ def test_join_strategies(plans, name):
 # test session's confs (shuffle.partitions=1, AQE off), pinned exact.  A
 # scan_parquet of a local file passes Spark the footer schema and starts no
 # job; a scan that fell back to schema inference would add one job per scan
-# (q5 makes six).
+# (q5 makes six).  The three curation queries count their eager checkpoints
+# and driver collects, which _materialize/_job name without adding a job.
 JOB_PINS = {
+    "dedup_minhash_star": 6,
     "q1_pricing_summary": 1,
     "q5_local_supplier_volume": 5,
     "q6_forecast_revenue": 1,
     "join_asof_backward": 1,
+    "sim_ivf_topk": 6,
+    "web_pagerank": 6,
 }
 
 

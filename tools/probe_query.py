@@ -1,12 +1,15 @@
-"""Isolated query probe: bench-methodology timing + event-log decomposition.
+"""Isolated query probe: bench-methodology timing + per-run job decomposition.
 
 Runs ONE registry query with exactly bench.py's methodology (sf0.001
-warmup, noop-sink force, best-of-N) in a fresh session with the event log
-enabled, then parses the log into per-run job time vs GAP time (wall not
-covered by any running job = driver-side planning/collect latency).  The
-gap number is what distinguishes "the cluster is working" from "the
-driver is sequentially planning" (guide §1.3) — e.g. the r12 sim_ivf_topk
-probe: 0.7s jobs / ~3.1s gaps.
+warmup, noop-sink force, best-of-N) in a fresh session, each run in its
+own job group, then reads the session's jobs from the JVM status store
+and reports per run: its job count per job description (the engine names
+the jobs it starts ``operator:phase``; the rest carry the run's group
+name) and its job time vs GAP time (wall not covered by any running job =
+driver-side planning/collect latency).  The gap number is what
+distinguishes "the cluster is working" from "the driver is sequentially
+planning" (guide §1.3) — e.g. the r12 sim_ivf_topk probe: 0.7s jobs /
+~3.1s gaps.
 
 Usage:
     python tools/probe_query.py <query> [sf_dir] [runs]
@@ -15,11 +18,11 @@ Env: PROBE_CPUS overrides SPARK_GRAFT_CPUS for the session.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 import time
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if ROOT not in sys.path:
@@ -32,21 +35,12 @@ def main() -> int:
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     if os.environ.get("PROBE_CPUS"):
         os.environ["SPARK_GRAFT_CPUS"] = os.environ["PROBE_CPUS"]
-    logdir = "/tmp/spark-events-probe"
-    os.makedirs(logdir, exist_ok=True)
 
+    from perfbench.layers import Store
     from polars_spark.queries import QUERIES
     from polars_spark.session import get_spark
 
-    spark = get_spark(
-        f"probe_{name}",
-        **{
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": logdir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = get_spark(f"probe_{name}")
     sc = spark.sparkContext
     fn = QUERIES[name]
 
@@ -55,7 +49,7 @@ def main() -> int:
 
     warm = "/root/testdata/sf0.001"
     if os.path.isdir(warm):
-        sc.setJobDescription(f"probe:{name}:warmup")
+        sc.setJobGroup(f"probe:{name}:warmup", f"probe:{name}:warmup")
         try:
             force(fn(spark, warm))
         except Exception:
@@ -64,54 +58,26 @@ def main() -> int:
 
     times = []
     for i in range(runs):
-        sc.setJobDescription(f"probe:{name}:run{i}")
+        sc.setJobGroup(f"probe:{name}:run{i}", f"probe:{name}:run{i}")
         t0 = time.perf_counter()
         force(fn(spark, sf_dir))
         times.append(time.perf_counter() - t0)
         spark.catalog.clearCache()
-    app_id = sc.applicationId
+    store = Store(spark)
+    store.drain()
+    jobs = store.jobs()
     spark.stop()
 
-    # --- event-log decomposition -------------------------------------
-    # Spark 4 writes a rolling directory eventlog_v2_<appId>/events_*
-    paths = glob.glob(os.path.join(logdir, f"*{app_id}*"))
-    files: list[str] = []
-    for p in paths:
-        if os.path.isdir(p):
-            files += sorted(glob.glob(os.path.join(p, "events_*")))
-        else:
-            files.append(p)
-    per_run: dict[str, list[tuple[float, float]]] = {}
-    job_run: dict[int, str] = {}
-    starts: dict[int, float] = {}
-    for path in files:
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    e = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                ev = e.get("Event")
-                if ev == "SparkListenerJobStart":
-                    props = e.get("Properties") or {}
-                    desc = props.get("spark.job.description", "")
-                    jid = e["Job ID"]
-                    job_run[jid] = desc
-                    starts[jid] = e["Submission Time"] / 1000.0
-                elif ev == "SparkListenerJobEnd":
-                    jid = e["Job ID"]
-                    if jid in starts:
-                        tag = job_run.get(jid, "")
-                        per_run.setdefault(tag, []).append(
-                            (starts[jid], e["Completion Time"] / 1000.0)
-                        )
+    per_run: dict[str, list[dict]] = {}
+    for j in jobs:
+        per_run.setdefault(j.get("jobGroup") or "", []).append(j)
 
     out = {"query": name, "sf_dir": sf_dir,
            "wall_runs": [round(t, 3) for t in times],
            "wall_best": round(min(times), 3)}
     decomp = {}
-    for tag, ivs in sorted(per_run.items()):
-        ivs.sort()
+    for tag, group in sorted(per_run.items()):
+        ivs = sorted((j["submissionTime"] / 1000.0, j["completionTime"] / 1000.0) for j in group)
         span = max(b for _, b in ivs) - min(a for a, _ in ivs)
         covered, cur_a, cur_b = 0.0, None, None
         for a, b in ivs:
@@ -125,6 +91,7 @@ def main() -> int:
             covered += cur_b - cur_a
         decomp[tag] = {
             "n_jobs": len(ivs),
+            "jobs_by_description": dict(Counter(j.get("description") or "" for j in group)),
             "job_span_s": round(span, 3),
             "job_covered_s": round(covered, 3),
             "gap_in_span_s": round(span - covered, 3),
