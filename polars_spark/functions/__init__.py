@@ -10,6 +10,7 @@ from functools import reduce as _reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from polars_spark.plans.expr import Expr, ExprContext, _to_expr, col, lit, when, all_, nth
 from polars_spark.plans.namespaces import element
@@ -266,21 +267,8 @@ def concat_list(*exprs) -> Expr:
 
     def fn(ctx: ExprContext) -> Column:
         cols = [e._resolve(ctx) for e in es]
-        arrs = list(cols)
-        if ctx.df is not None:
-            try:
-                fields = ctx.df.select(
-                    *[c.alias(f"__cl{i}") for i, c in enumerate(cols)]
-                ).schema.fields
-                arrs = [
-                    c if f.dataType.typeName() == "array" else F.array(c)
-                    for c, f in zip(cols, fields)
-                ]
-            except Exception:
-                arrs = [F.array(c) for c in cols]
-        else:
-            arrs = [F.array(c) for c in cols]
-        return F.concat(*arrs)
+        ts = ctx.dtype(*cols)
+        return F.concat(*[c if isinstance(t, ArrayType) else F.array(c) for c, t in zip(cols, ts)])
 
     return Expr(fn, es[0]._name if es else "literal")
 

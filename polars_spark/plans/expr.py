@@ -20,8 +20,14 @@ import datetime as _dt
 from collections.abc import Iterable
 from typing import Any, Callable
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, DateType, DecimalType, DoubleType, FloatType, IntegralType,
+    NumericType, StringType, TimestampNTZType, TimestampType, TimeType,
+)
 
 __all__ = ["Expr", "ExprContext", "OrderNeeded", "col", "lit", "when", "all_", "nth"]
 
@@ -40,6 +46,49 @@ class OrderNeeded(ValueError):
         super().__init__(
             "order-sensitive expression needs the deferred scan order materialized"
         )
+
+
+def _sql_text(c: Column) -> str:
+    """``c``'s SQL text without PySpark's ``Column<'…'>`` wrapper."""
+    s = str(c)
+    return s[8:-2] if s.startswith("Column<'") and s.endswith("'>") else s
+
+
+def _reference_type(c: Column, known: dict):
+    """The type of ``c`` from ``known`` (name -> type) when ``c`` is a bare
+    column reference, else None.  The text alone is not proof: a literal
+    or a lambda variable can print like a column name."""
+    name = _sql_text(c)
+    t = known.get(name)
+    if t is None or "." in name:  # a dotted reference is a field access
+        return None
+    try:
+        if c._jc.node().getClass().getSimpleName() == "UnresolvedAttribute":
+            return t
+    except (AttributeError, Py4JError):  # no JVM column (Spark Connect)
+        pass
+    return None
+
+
+# What may carry a value of each kind into an expression, matched against
+# its SQL text: the type's name (casts, typed literals, constructors such as
+# make_dt_interval), how Spark prints the kind's untyped literals (a Decimal
+# prints like a double, a timedelta as PT24H, a string quoted), and for
+# booleans every comparison, connective and predicate function.
+_KIND_MARKERS = {
+    k: re.compile(p, re.IGNORECASE)
+    for k, p in {
+        "boolean": r"[<>=!]|boolean|\b(true|false|and|or|not|in|is\w*|between|case|if"
+        r"|\w*like|regexp\w*|contains|startswith|endswith|exists|forall|array_contains"
+        r"|arrays_overlap|map_contains_key|bool_\w+|every|some|any|equal_null)\b",
+        "interval": r"interval|\bPT-?\d",
+        "decimal": r"decimal|\d\.\d|\dE-?\d",
+        "date": r"date|\d{4}-\d\d-\d\d",
+        "timestamp": r"timestamp|\d{4}-\d\d-\d\d",
+        "time": r"time(?!stamp)|\d\d:\d\d",
+        "string": r"string|'",
+    }.items()
+}
 
 
 class ExprContext:
@@ -91,6 +140,55 @@ class ExprContext:
         name = f"__series_{len(self.preps)}__"
         self.preps.append((name, "series", list(vals)))
         return F.col(name)
+
+    def dtype(self, *cols: Column) -> tuple:
+        """The Spark ``DataType`` of each column over this frame; all None
+        when there is no frame or analysis fails (callers keep their
+        fallback).  The one place lowering asks what type a Column has: a
+        polars expression's dtype follows from the schema, but a Column
+        gets one only by analysis against a plan.
+
+        A bare column reference is read off the frame's already-analyzed
+        schema, free.  Anything else costs one analysis-only
+        ``select(...).schema`` for all of ``cols`` together: no job, but
+        the frame's whole plan is analyzed again, so a site whose answer
+        rarely matters asks ``may_be`` first."""
+        none = (None,) * len(cols)
+        if self.df is None:
+            return none
+        try:
+            fields = self.df.schema.fields
+            known = {f.name: f.dataType for f in fields}
+            if len(known) < len(fields):  # duplicate names: let analysis decide
+                known = {}
+            out = [_reference_type(c, known) for c in cols]
+            todo = [i for i, t in enumerate(out) if t is None]
+            if todo:
+                sch = self.df.select(*[cols[i].alias(f"__dtype{i}__") for i in todo]).schema
+                for i, f in zip(todo, sch.fields):
+                    out[i] = f.dataType
+            return tuple(out)
+        except (PySparkException, Py4JError):
+            return none
+
+    def may_be(self, c: Column, kinds: tuple[str, ...]) -> bool:
+        """The cheap gate in front of ``dtype``: False only when ``c``
+        provably has no type of one of ``kinds``, the words of Spark type
+        names ("boolean", "interval", "decimal", "time", ...; a nested type
+        is of the kinds of its parts).  The proof is textual: no marker of
+        a kind in ``c``'s SQL (_KIND_MARKERS) and no reference to a frame
+        column of such a type.  Without a frame nothing is proven.  Not
+        covered: Python UDFs, whose text shows no return type."""
+        if self.df is None:
+            return True
+        txt = _sql_text(c)
+        if any(_KIND_MARKERS[k].search(txt) for k in kinds):
+            return True
+        return any(
+            re.search(rf"(?<!\w){re.escape(f.name)}(?!\w)", txt)
+            for f in self.df.schema.fields
+            if set(kinds) & set(re.findall("[a-z]+", f.dataType.simpleString()))
+        )
 
     def order_specs(self) -> list[tuple[str, bool]]:
         return [(o, False) if isinstance(o, str) else (o[0], bool(o[1])) for o in self.order_cols]
@@ -316,48 +414,29 @@ def _col_of(v: Any, ctx: ExprContext) -> Column:
 
 
 _NUMERIC_DIV = {"tinyint", "smallint", "int", "bigint", "float", "double", "boolean"}
+# operand kinds for which `/` keeps Spark's native division
+_DIV_KINDS = ("decimal", "interval", "date", "timestamp", "time")
 
-# substrings whose PRESENCE in an operand's pretty-printed sql means it may
-# be boolean- or interval-typed (comparisons, predicates, literals); their
-# ABSENCE plus no boolean/interval column reference proves plain-numeric
-_BOOLY_MARKERS = (
-    "<", ">", "=", "!", " NOT ", " AND ", " OR ", " XOR ", " IN ", " IS ",
-    " LIKE ", " BETWEEN ", "TRUE", "FALSE", "INTERVAL", "ISNAN", "ISNULL",
-    "ISNOTNULL", "CONTAINS", "STARTSWITH", "ENDSWITH", "RLIKE", "REGEXP",
-    "ARRAY_CONTAINS", "EXISTS", "FORALL", "ILIKE", "CASE",
-)
+# (min, max) of the Spark types Expr.lower_bound/upper_bound are defined for
+_SPARK_BOUNDS = {
+    "tinyint": (-128, 127),
+    "smallint": (-32768, 32767),
+    "int": (-2147483648, 2147483647),
+    "bigint": (-9223372036854775808, 9223372036854775807),
+    "float": (float("-inf"), float("inf")),
+    "double": (float("-inf"), float("inf")),
+}
 
 
-def _agg_operand_kind(ctx, c: Column) -> "str | None":
-    """Operand dtype for aggregate lowering, probe-free on the numeric hot
-    path: the full ``df.select(c).schema`` probe re-analyzes the plan (sum
-    and mean are in EVERY relational query — measurably slow in deep
-    pipelines, same hazard class as _ieee_div's probe).  Returns
-    ``"numericish"`` when the pretty sql contains no boolean/interval
-    marker and references no boolean/interval column; otherwise the probed
-    simpleString dtype (or None when unknowable — callers keep their
-    conservative fallback, and any mis-detection is a LOUD analysis error,
-    never a silent value change)."""
-    df = getattr(ctx, "df", None)
-    if df is None:
-        return None
-    try:
-        txt = str(c)
-        up = txt.upper()
-        if not any(m in up for m in _BOOLY_MARKERS):
-            risky = {
-                f.name
-                for f in df.schema.fields
-                if "boolean" in f.dataType.simpleString()
-                or "interval" in f.dataType.simpleString()
-            }
-            if not risky or not (
-                set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", txt)) & risky
-            ):
-                return "numericish"
-        return df.select(c.alias("__p__")).schema[0].dataType.simpleString()
-    except Exception:
-        return None
+def _time_ns(c: Column) -> Column:
+    """Nanoseconds since midnight of a native TIME column (polars Time's
+    physical Int64)."""
+    sec = F.split(c.cast("string"), ":")[2]  # "ss[.ffffff]"
+    return (
+        F.hour(c).cast("bigint") * F.lit(3_600_000_000_000)
+        + F.minute(c).cast("bigint") * F.lit(60_000_000_000)
+        + (sec.cast("decimal(16,9)") * F.lit(1_000_000_000)).cast("bigint")
+    )
 
 
 # unsigned dtypes map to the next-wider SIGNED Spark type (UInt8->smallint…),
@@ -476,21 +555,11 @@ def _decimal_scales(a: Column, b: Column, ctx) -> tuple | None:
     DecimalScaleFallbackWarning when decimals MIGHT be in play but the
     schema context is missing or the probe failed (ctx.df None in agg
     contexts) — the fallback is then Spark's native scale, which must be
-    detectable rather than silent.  Same cheap text pre-check as _ieee_div:
-    the schema probe (analysis only, no job) runs only when a decimal
-    column or literal is actually in play, so the numeric hot path is
-    untouched."""
+    detectable rather than silent."""
     import warnings
 
-    def _maybe_decimal_text() -> bool:
-        try:
-            return "DECIMAL" in f"{a} {b}".upper()
-        except Exception:
-            return True
-
-    df = getattr(ctx, "df", None)
-    if df is None:
-        if _maybe_decimal_text():
+    if getattr(ctx, "df", None) is None:
+        if _KIND_MARKERS["decimal"].search(f"{_sql_text(a)} {_sql_text(b)}"):
             warnings.warn(
                 "decimal multiplication without schema context: result keeps "
                 "Spark's native scale s1+s2, not polars' max(s1,s2); cast the "
@@ -499,38 +568,10 @@ def _decimal_scales(a: Column, b: Column, ctx) -> tuple | None:
                 stacklevel=3,
             )
         return None
-    try:
-        txt = f"{a} {b}"
-        risky = "DECIMAL" in txt.upper()
-        if not risky:
-            dec_cols = {
-                f.name
-                for f in df.schema.fields
-                if f.dataType.simpleString().startswith("decimal")
-            }
-            if not dec_cols:
-                return None
-            idents = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", txt))
-            risky = bool(idents & dec_cols)
-        if not risky:
-            return None
-        sch = df.select(a.alias("__dec_a__"), b.alias("__dec_b__")).schema
-        ts = [f.dataType.simpleString() for f in sch.fields[-2:]]
-        ints = ("tinyint", "smallint", "int", "bigint")
-        scales = []
-        for t in ts:
-            if t.startswith("decimal"):
-                scales.append(int(t[:-1].split(",")[1]))
-            elif t in ints:
-                scales.append(0)
-            else:
-                return None
-        if not any(t.startswith("decimal") for t in ts):
-            return None
-        return tuple(scales)
-    except Exception:
-        # the operands LOOKED decimal (we only get here past the risky
-        # pre-check) but the analysis probe failed — flag the miss
+    if not (ctx.may_be(a, ("decimal",)) or ctx.may_be(b, ("decimal",))):
+        return None
+    ts = ctx.dtype(a, b)
+    if None in ts:
         warnings.warn(
             "decimal scale probe failed; multiplication keeps Spark's native "
             "scale s1+s2, not polars' max(s1,s2)",
@@ -538,6 +579,17 @@ def _decimal_scales(a: Column, b: Column, ctx) -> tuple | None:
             stacklevel=3,
         )
         return None
+    return _scales(ts)
+
+
+def _scales(ts) -> tuple | None:
+    """Decimal scales of operand types (integers at scale 0) when at least
+    one is decimal and none is anything else."""
+    if not any(isinstance(t, DecimalType) for t in ts):
+        return None
+    if not all(isinstance(t, (DecimalType, IntegralType)) for t in ts):
+        return None
+    return tuple(getattr(t, "scale", 0) for t in ts)
 
 
 def _decimal_mul(a: Column, b: Column, ctx) -> Column:
@@ -564,62 +616,23 @@ def _ieee_div(a: Column, b: Column, ctx) -> Column:
     DIVIDE_BY_ZERO error Spark 4 raises by default (surfaced by the
     empty-table sweep: any 100 TB pipeline hits a zero divisor eventually).
 
-    The operand types are probed once at lowering (analysis only, no job):
-    non-numeric operands (duration/interval, decimal) keep Spark's native
+    Non-numeric operands (duration/interval, decimal) keep Spark's native
     `/` so their result TYPE is preserved — their zero-divisor behavior is
     the engine's (polars decimal div by zero errors too)."""
-    df = getattr(ctx, "df", None)
-    if df is None:
-        return a / b
-    try:
-        # probe-free fast path (the analysis probe below re-analyzes the
-        # whole plan — measurably slow in deep pipelines): an operand can
-        # only be non-numeric if it references a temporal/decimal/interval
-        # COLUMN of the frame or embeds a temporal/decimal LITERAL, both
-        # visible in the operands' pretty-printed sql + the cached schema
-        txt = f"{a} {b}"
-        up = txt.upper()
-        risky = (
-            "INTERVAL" in up or "TIMESTAMP" in up or "DECIMAL" in up or "DATE" in up
-        )
-        if not risky:
-            risky_cols = {
-                f.name
-                for f in df.schema.fields
-                if any(
-                    t in f.dataType.simpleString()
-                    for t in ("decimal", "interval", "date", "timestamp", "time")
-                )
-            }
-            if risky_cols:
-                idents = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", txt))
-                risky = bool(idents & risky_cols)
-    except Exception:
-        risky = True
-    kinds = ("double", "double")
-    if risky:
-        try:
-            sch = df.select(a.alias("__div_a__"), b.alias("__div_b__")).schema
-            kinds = tuple(f.dataType.simpleString() for f in sch.fields[-2:])
-        except Exception:
-            kinds = None
-    if kinds is not None and any(k.startswith("decimal") for k in kinds):
+    ts = (DoubleType(), DoubleType())
+    if ctx.may_be(a, _DIV_KINDS) or ctx.may_be(b, _DIV_KINDS):
+        ts = ctx.dtype(a, b)
+    if any(isinstance(t, DecimalType) for t in ts):
         # polars decimal division: result scale = max(s1, s2) (integers at
         # scale 0), dropped digits rounded half-to-even (dec128_div); the
         # zero-divisor ERROR is shared polars/Spark-ANSI behavior.  Spark's
         # native quotient carries >= 6 guard digits past any polars scale,
         # so the bround sees the exact leading digits in practice.
-        ints = ("tinyint", "smallint", "int", "bigint")
-        scales = [
-            int(k[:-1].split(",")[1]) if k.startswith("decimal") else 0
-            for k in kinds
-            if k.startswith("decimal") or k in ints
-        ]
-        if len(scales) == 2:
-            s = max(scales)
-            return F.bround(a / b, s).cast(f"decimal(38,{s})")
-        return a / b
-    if kinds is None or not all(k in _NUMERIC_DIV for k in kinds):
+        sc = _scales(ts)
+        if sc is None:
+            return a / b
+        return F.bround(a / b, max(sc)).cast(f"decimal(38,{max(sc)})")
+    if None in ts or not all(t.simpleString() in _NUMERIC_DIV for t in ts):
         return a / b
     d, e = a.cast("double"), b.cast("double")
     q = d / F.nullif(e, F.lit(0.0))  # divisor never 0 -> ANSI-safe
@@ -786,21 +799,9 @@ class Expr:
         def fn(ctx: ExprContext) -> Column:
             a, b = parent._resolve(ctx), oe._resolve(ctx)
             # polars `+` on string columns CONCATENATES (Spark's + would
-            # cast-error).  Cheap pre-check on the ROOT column names keeps
-            # the full analysis probe off the numeric hot path.
-            if ctx.df is not None:
-                try:
-                    sch = dict(ctx.df.dtypes)
-                    maybe_str = (
-                        sch.get(parent._name) == "string"
-                        or sch.get(getattr(oe, "_name", None)) == "string"
-                    )
-                    if maybe_str:
-                        dt = ctx.df.select(a.alias("__p__")).schema[0].dataType.simpleString()
-                        if dt == "string":
-                            return F.concat(a, b)
-                except Exception:
-                    pass
+            # cast-error)
+            if ctx.may_be(a, ("string",)) and isinstance(ctx.dtype(a)[0], StringType):
+                return F.concat(a, b)
             return a + b
 
         return Expr(fn, self._name, self._is_agg or oe._is_agg)
@@ -912,14 +913,9 @@ class Expr:
 
         def fn(ctx: ExprContext) -> Column:
             a, b = self._resolve(ctx), oe._resolve(ctx)
-            try:
-                # booleans need logical xor (!=); ints bitwise — driver-only
-                # schema probe, falls back to bitwise on analysis failure
-                t = ctx.df.select(a.alias("__t__")).schema["__t__"].dataType.simpleString()
-                if t == "boolean":
-                    return a != b
-            except Exception:
-                pass
+            # booleans need logical xor (!=); ints bitwise
+            if isinstance(ctx.dtype(a)[0], BooleanType):
+                return a != b
             return a.bitwiseXOR(b)
 
         return Expr(fn, self._name, self._is_agg or oe._is_agg)
@@ -930,13 +926,8 @@ class Expr:
     def __invert__(self):
         def fn(ctx: ExprContext) -> Column:
             c = self._resolve(ctx)
-            dt = None
-            if ctx.df is not None:
-                try:
-                    dt = ctx.df.select(c.alias("__p__")).schema[0].dataType.simpleString()
-                except Exception:
-                    dt = None
-            if dt is not None and dt != "boolean":
+            (t,) = ctx.dtype(c)
+            if t is not None and not isinstance(t, BooleanType):
                 # reference not_: integers invert bitwise (expr/expr.py:1142)
                 return F.bitwise_not(c)
             return ~c
@@ -1123,18 +1114,18 @@ class Expr:
             # Datetime -> wall-clock time of day; integers are ns since
             # midnight (the pre-round-6 physical mapping); strings parse
             # natively.  Spark has no direct timestamp->time cast, so the
-            # source type is probed once at lowering (analysis only, no job).
+            # source type decides.
             def fn_time(ctx: ExprContext) -> Column:
                 from polars_spark.session import ensure_time_type
 
                 ensure_time_type(getattr(getattr(ctx, "df", None), "sparkSession", None))
                 c = self._resolve(ctx)
-                t = ctx.df.select(c.alias("__t__")).schema["__t__"].dataType.simpleString()
-                if t.split("(")[0] == "time":
+                (t,) = ctx.dtype(c)
+                if isinstance(t, TimeType):
                     return c
-                if t.startswith("timestamp"):
+                if isinstance(t, (TimestampType, TimestampNTZType)):
                     return F.date_format(c, "HH:mm:ss.SSSSSS").cast(spark_type)
-                if t in ("bigint", "long", "int", "smallint", "tinyint"):
+                if isinstance(t, IntegralType):
                     from polars_spark.functions import _ns_to_time
 
                     return _ns_to_time(c.cast("long"))
@@ -1143,26 +1134,16 @@ class Expr:
             return Expr(fn_time, self._name, self._is_agg)
         dkey = _dtype_key(dtype)
         if spark_type == "bigint":
-            # Time -> Int64 yields ns since midnight (polars physical cast).
-            # The probe analyzes a subplan, so gate it on the frame actually
-            # containing a TIME column (df.dtypes is already-analyzed, free)
+            # Time -> Int64 yields ns since midnight (polars physical cast)
             unsigned_big = dkey.startswith("UInt")
             umax_big = _UINT_MAX.get(dkey)
 
             def fn_big(ctx: ExprContext) -> Column:
+                from polars_spark.plans.namespaces import _is_time_col
+
                 c = self._resolve(ctx)
-                if ctx.df is None or not any(
-                    t.split("(")[0] == "time" for _n, t in ctx.df.dtypes
-                ):
-                    return _str_grammar_cast(c, spark_type, unsigned_big, strict, umax=umax_big)
-                t = ctx.df.select(c.alias("__t__")).schema["__t__"].dataType.simpleString()
-                if t.split("(")[0] == "time":
-                    sec = F.split(c.cast("string"), ":")[2]  # "ss[.ffffff]"
-                    return (
-                        F.hour(c).cast("bigint") * F.lit(3_600_000_000_000)
-                        + F.minute(c).cast("bigint") * F.lit(60_000_000_000)
-                        + (sec.cast("decimal(16,9)") * F.lit(1_000_000_000)).cast("bigint")
-                    )
+                if _is_time_col(ctx, c):
+                    return _time_ns(c)
                 return _str_grammar_cast(c, spark_type, unsigned_big, strict, umax=umax_big)
 
             return Expr(fn_big, self._name, self._is_agg)
@@ -1203,7 +1184,7 @@ class Expr:
 
         Spark's F.round on DOUBLE rounds the SHORTEST-DECIMAL repr
         (BigDecimal.valueOf) HALF_UP, which disagrees with that pipeline
-        exactly at .xxxxx5 knife-edges (driver-red agg_product_entropy, r12):
+        exactly at .xxxxx5 knife-edges:
         a true 8-digit decimal ending in ...50 prints as its own shortest
         repr (Spark rounds up) while x*10^d in doubles can land a hair below
         the .5 (DuckDB/polars round down).  So for float columns we mirror
@@ -1213,11 +1194,8 @@ class Expr:
         if mode == "half_away_from_zero":
             def fn(ctx: ExprContext) -> Column:
                 c = self._resolve(ctx)
-                try:
-                    t = ctx.df.select(c.alias("__tp__")).schema["__tp__"].dataType.simpleString()
-                except Exception:
-                    t = None
-                if t in ("double", "float") and decimals >= 0:
+                (t,) = ctx.dtype(c)
+                if isinstance(t, (DoubleType, FloatType)) and decimals >= 0:
                     m = F.lit(float(10 ** decimals))
                     y = c.cast("double") * m
                     mag = F.when(
@@ -1424,19 +1402,21 @@ class Expr:
         """polars sum semantics: nulls are ignored AND an empty/all-null
         group sums to 0 (not SQL's NULL — reference docs 'missing data').
         The zero-coalesce is skipped for interval dtypes (no untyped zero
-        literal) and for frameless meta contexts; the dtype check is plan
-        analysis only, no job (and probe-free on the numeric hot path)."""
+        literal) and for frameless meta contexts."""
 
         def fn(ctx: ExprContext) -> Column:
             if getattr(ctx, "element_agg", False):
                 return _element_agg(ctx, self, "sum")
             c = self._resolve(ctx)
-            dt = _agg_operand_kind(ctx, c)
-            if dt == "boolean":
+            # temporal arithmetic yields intervals, so temporal operands count
+            t = DoubleType()
+            if ctx.may_be(c, ("boolean", "interval", "date", "timestamp", "time")):
+                (t,) = ctx.dtype(c)
+            if isinstance(t, BooleanType):
                 # polars: boolean sum counts the Trues
                 c = c.cast("bigint")
             s = _wover(ctx, F.sum(c))
-            if dt is None or dt.startswith("interval"):
+            if t is None or t.simpleString().startswith("interval"):
                 return s
             return F.coalesce(s, F.lit(0))
 
@@ -1448,7 +1428,7 @@ class Expr:
             if getattr(ctx, "element_agg", False):
                 return _element_agg(ctx, self, "mean")
             c = self._resolve(ctx)
-            if _agg_operand_kind(ctx, c) == "boolean":
+            if ctx.may_be(c, ("boolean",)) and isinstance(ctx.dtype(c)[0], BooleanType):
                 c = c.cast("double")
             return _wover(ctx, F.mean(c))
 
@@ -1801,15 +1781,9 @@ class Expr:
             # polars quantile output is f64 for NUMERIC inputs
             # (Scalar::to_f64); temporal inputs keep their type (element
             # pick), and date->double is not even a legal Spark cast — so
-            # the f64 cast is gated on one analysis-time type probe
-            to_f64 = True
-            try:
-                t = ctx.df.select(c.alias("__q__")).schema["__q__"].dataType.simpleString()
-                to_f64 = t in (
-                    "tinyint", "smallint", "int", "bigint", "float", "double",
-                ) or t.startswith("decimal")
-            except Exception:
-                pass
+            # the f64 cast is gated on the input type
+            (t,) = ctx.dtype(c)
+            to_f64 = t is None or isinstance(t, NumericType)
 
             def out(col: Column) -> Column:
                 return col.cast("double") if to_f64 else col
@@ -3151,18 +3125,8 @@ class Expr:
         def fn(ctx: ExprContext) -> Column:
             cs = [parent._resolve(ctx)] + [o._resolve(ctx) for o in oes]
             # mixed bool/int operands: ints are bitwise (reference and_/or_)
-            non_bool = False
-            if ctx.df is not None:
-                try:
-                    sch = ctx.df.select(
-                        *[c.alias(f"__b{i}") for i, c in enumerate(cs)]
-                    ).schema
-                    non_bool = any(
-                        f.dataType.simpleString() != "boolean" for f in sch.fields
-                    )
-                except Exception:
-                    non_bool = False
-            if non_bool:
+            ts = ctx.dtype(*cs)
+            if None not in ts and not all(isinstance(t, BooleanType) for t in ts):
                 cs = [c.cast("bigint") for c in cs]
                 out = cs[0]
                 for c in cs[1:]:
@@ -3304,55 +3268,31 @@ class Expr:
             if cats:
                 arr = F.array(*[F.lit(x) for x in cats])
                 return (F.array_position(arr, c) - 1).cast("bigint")
-            try:
-                # resolve the EXPRESSION's dtype (analysis only, no job): a
-                # name-based schema lookup misses chained casts like
-                # cast(Time).to_physical()
-                t = ctx.df.select(c.alias("__tp__")).schema["__tp__"].dataType.simpleString()
-            except Exception:
-                t = dict(zip(ctx.df.columns, [f.dataType.simpleString() for f in ctx.df.schema])).get(self._name)
-            if t == "date":
+            (t,) = ctx.dtype(c)
+            if isinstance(t, DateType):
                 return F.datediff(c, F.lit("1970-01-01").cast("date")).cast("int")
-            if t in ("timestamp", "timestamp_ntz"):
+            if isinstance(t, (TimestampType, TimestampNTZType)):
                 return F.unix_micros(c.cast("timestamp"))
-            if t is not None and t.split("(")[0] == "time":
-                sec = F.split(c.cast("string"), ":")[2]
-                return (
-                    F.hour(c).cast("bigint") * F.lit(3_600_000_000_000)
-                    + F.minute(c).cast("bigint") * F.lit(60_000_000_000)
-                    + (sec.cast("decimal(16,9)") * F.lit(1_000_000_000)).cast("bigint")
-                )
+            if isinstance(t, TimeType):
+                return _time_ns(c)
             return c
 
         return Expr(fn, self._name)
 
     def lower_bound(self):
         """Dtype minimum as a literal (reference expr.py lower_bound)."""
-
-        def fn(ctx: ExprContext) -> Column:
-            t = dict(zip(ctx.df.columns, [f.dataType.simpleString() for f in ctx.df.schema])).get(self._name)
-            bounds = {
-                "tinyint": -128, "smallint": -32768, "int": -2147483648,
-                "bigint": -9223372036854775808,
-                "float": float("-inf"), "double": float("-inf"),
-            }
-            if t not in bounds:
-                raise ValueError(f"lower_bound undefined for dtype {t!r}")
-            return F.lit(bounds[t]).cast(t)
-
-        return Expr(fn, self._name)
+        return self._dtype_bound(0, "lower_bound")
 
     def upper_bound(self):
+        return self._dtype_bound(1, "upper_bound")
+
+    def _dtype_bound(self, side: int, what: str):
         def fn(ctx: ExprContext) -> Column:
-            t = dict(zip(ctx.df.columns, [f.dataType.simpleString() for f in ctx.df.schema])).get(self._name)
-            bounds = {
-                "tinyint": 127, "smallint": 32767, "int": 2147483647,
-                "bigint": 9223372036854775807,
-                "float": float("inf"), "double": float("inf"),
-            }
-            if t not in bounds:
-                raise ValueError(f"upper_bound undefined for dtype {t!r}")
-            return F.lit(bounds[t]).cast(t)
+            (t,) = ctx.dtype(self._resolve(ctx))
+            t = t and t.simpleString()
+            if t not in _SPARK_BOUNDS:
+                raise ValueError(f"{what} undefined for dtype {t!r}")
+            return F.lit(_SPARK_BOUNDS[t][side]).cast(t)
 
         return Expr(fn, self._name)
 
@@ -3779,19 +3719,14 @@ class Expr:
 
         def fn(ctx: ExprContext) -> Column:
             lc, rc = left._resolve(ctx), right._resolve(ctx)
-            if ctx.df is not None:
-                # a Null-dtype side (pl.repeat(None, n)) resolves to
-                # array<void>, which concat refuses — coerce it to the
-                # other side's type (plan analysis only, no job)
-                try:
-                    kinds = dict(ctx.df.select(lc.alias("__l"), rc.alias("__r")).dtypes)
-                    lt, rt = kinds.get("__l", ""), kinds.get("__r", "")
-                    if lt == "array<void>" and rt.startswith("array<") and rt != lt:
-                        lc = lc.cast(rt)
-                    elif rt == "array<void>" and lt.startswith("array<") and lt != rt:
-                        rc = rc.cast(lt)
-                except Exception:
-                    pass
+            # a Null-dtype side (pl.repeat(None, n)) resolves to
+            # array<void>, which concat refuses — coerce it to the other
+            # side's type
+            lt, rt = (t.simpleString() if t else "" for t in ctx.dtype(lc, rc))
+            if lt == "array<void>" and rt.startswith("array<") and rt != lt:
+                lc = lc.cast(rt)
+            elif rt == "array<void>" and lt.startswith("array<") and lt != rt:
+                rc = rc.cast(lt)
             return F.concat(lc, rc)
 
         return Expr(fn, self._name, is_agg=True)

@@ -23,6 +23,7 @@ from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegralType, TimeType
 
 from polars_spark.plans.expr import Expr, ExprContext, _dtype_to_spark, _to_expr
 
@@ -858,22 +859,9 @@ class StringNamespace(_NS):
 
 
 def _is_time_col(ctx, c):
-    """Probe (analysis-only) whether a resolved column is Spark native TIME
-    (the polars Time dtype since round 6)."""
-    try:
-        if ctx.df is None or not any(
-            t.split("(")[0] == "time" for _n, t in ctx.df.dtypes
-        ):
-            return False  # no TIME column anywhere: skip the subplan probe
-        return (
-            ctx.df.select(c.alias("__t__"))
-            .schema["__t__"]
-            .dataType.simpleString()
-            .split("(")[0]
-            == "time"
-        )
-    except Exception:
-        return False
+    """Whether a resolved column is Spark native TIME (the polars Time
+    dtype)."""
+    return ctx.may_be(c, ("time",)) and isinstance(ctx.dtype(c)[0], TimeType)
 
 
 def _time_sec_frac(c):
@@ -1512,14 +1500,10 @@ class ListNamespace(_NS):
         def fn(ctx) -> Column:
             c = parent._resolve(ctx)
             init = F.lit(0.0)
-            try:
-                # driver-only analysis: integer element lists sum to their
-                # integer type (polars rule), not double
-                et = ctx.df.select(c.alias("__t__")).schema["__t__"].dataType.elementType.simpleString()
-                if et in ("tinyint", "smallint", "int", "bigint"):
-                    init = F.lit(0).cast("bigint")
-            except Exception:
-                pass
+            # integer element lists sum to their integer type (polars
+            # rule), not double
+            if isinstance(getattr(ctx.dtype(c)[0], "elementType", None), IntegralType):
+                init = F.lit(0).cast("bigint")
             return F.aggregate(self._nn(c), init, lambda acc, x: acc + x)
 
         return Expr(fn, parent._name)
@@ -1753,12 +1737,8 @@ class ListNamespace(_NS):
 
         def fn(ctx: ExprContext) -> Column:
             c, v = e._resolve(ctx), o._resolve(ctx)
-            t = None
-            try:
-                t = ctx.df.select(v.alias("__t__")).schema["__t__"].dataType.simpleString()
-            except Exception:
-                pass
-            if t is not None and not t.startswith("array"):
+            (t,) = ctx.dtype(v)
+            if t is not None and not isinstance(t, ArrayType):
                 v = F.array(v)
             return F.concat(c, v)
 
@@ -1851,13 +1831,8 @@ class ListNamespace(_NS):
         """Resolve both sides, coercing the right array's element type to
         the left's (Spark's array set ops reject differing int widths)."""
         a, b = self._e._resolve(ctx), o._resolve(ctx)
-        if ctx.df is not None:
-            try:
-                dt = ctx.df.select(a.alias("__p__")).schema[0].dataType.simpleString()
-                b = b.cast(dt)
-            except Exception:
-                pass
-        return a, b
+        (t,) = ctx.dtype(a)
+        return a, (b if t is None else b.cast(t.simpleString()))
 
     def set_union(self, other) -> Expr:
         o = self._set_operand(other)
@@ -1897,16 +1872,20 @@ class ListNamespace(_NS):
 _FIELD_SCOPE: list = []
 
 
+def _field_names(ctx, c: Column) -> list[str]:
+    """Field names of a resolved struct column."""
+    (t,) = ctx.dtype(c)
+    if t is None:
+        raise ValueError(f"struct fields of {c} do not resolve over this frame")
+    return t.names
+
+
 class StructNamespace(_NS):
     def field(self, name, *more_names) -> Expr:
         """Struct field access (reference expr/struct.py field): a name, an
         int position, several names (multi-output expansion in select), a
         wildcard '*', or a ^regex$ over field names."""
         e = self._e
-
-        def _names(ctx):
-            t = ctx.df.select(e._resolve(ctx).alias("__s__")).schema["__s__"].dataType
-            return [f.name for f in t.fields]
 
         if more_names or name == "*" or (
             isinstance(name, str) and name.startswith("^") and name.endswith("$")
@@ -1918,7 +1897,7 @@ class StructNamespace(_NS):
             wanted = [name, *more_names]
 
             def fn(ctx):
-                fields = _names(ctx)
+                fields = _field_names(ctx, e._resolve(ctx))
                 if name == "*":
                     keep = fields
                 elif name.startswith("^"):
@@ -1933,7 +1912,7 @@ class StructNamespace(_NS):
             return out
         if isinstance(name, int):
             def fn(ctx):
-                fields = _names(ctx)
+                fields = _field_names(ctx, e._resolve(ctx))
                 return e._resolve(ctx).getField(fields[name])
 
             return Expr(fn, "field")
@@ -1995,7 +1974,7 @@ class StructNamespace(_NS):
 
         def fn(ctx: ExprContext) -> Column:
             c = e._resolve(ctx)
-            old = ctx.df.select(c.alias("__s")).schema["__s"].dataType.names
+            old = _field_names(ctx, c)
             return F.struct(*[c.getField(o).alias(n) for o, n in zip(old, names)])
 
         return Expr(fn, e._name)
@@ -2005,7 +1984,7 @@ class StructNamespace(_NS):
 
         def fn(ctx: ExprContext) -> Column:
             c = e._resolve(ctx)
-            old = ctx.df.select(c.alias("__s")).schema["__s"].dataType.names
+            old = _field_names(ctx, c)
             return F.struct(*[c.getField(o).alias(prefix + o) for o in old])
 
         return Expr(fn, e._name)
@@ -2015,7 +1994,7 @@ class StructNamespace(_NS):
 
         def fn(ctx: ExprContext) -> Column:
             c = e._resolve(ctx)
-            old = ctx.df.select(c.alias("__s")).schema["__s"].dataType.names
+            old = _field_names(ctx, c)
             return F.struct(*[c.getField(o).alias(o + suffix) for o in old])
 
         return Expr(fn, e._name)
@@ -2025,7 +2004,7 @@ class StructNamespace(_NS):
 
         def fn(ctx: ExprContext) -> Column:
             c = e._resolve(ctx)
-            old = ctx.df.select(c.alias("__s")).schema["__s"].dataType.names
+            old = _field_names(ctx, c)
             return F.struct(*[c.getField(o).alias(function(o)) for o in old])
 
         return Expr(fn, e._name)

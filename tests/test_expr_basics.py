@@ -221,11 +221,15 @@ def test_expr_math_and_bounds(pl, lf):
         pl.lit(12345.0).round_sig_figs(2).alias("sf"),
         pl.col("i").upper_bound().alias("ub"),
         pl.col("i").lower_bound().alias("lb"),
+        # the bound is the expression's dtype, not its root column's
+        pl.col("i").cast(pl.Int8).upper_bound().alias("ub8"),
+        pl.col("i").cast(pl.Int16).lower_bound().alias("lb16"),
     ).collect().to_dict("records")[0]
     assert abs(r["ach"] - math.acosh(2)) < 1e-12
     assert abs(r["cot"] - 1 / math.tan(2)) < 1e-12
     assert r["sf"] == 12000.0
     assert r["ub"] == 9223372036854775807 and r["lb"] == -9223372036854775808
+    assert r["ub8"] == 127 and r["lb16"] == -32768
 
 
 def test_expr_by_aggs_and_rolling_by(pl, lf):
