@@ -106,6 +106,21 @@ def _materialize(df: DataFrame, tag: str) -> DataFrame:
         return df.localCheckpoint(eager=True)
 
 
+def _collect_bounded(df: DataFrame, cap: int, tag: str):
+    """``df``'s rows as a pyarrow Table when it has at most ``cap`` of them,
+    else None: one bounded action, ``df.limit(cap + 1)``, by jobs named
+    ``tag``.  Rows and floats are those ``collect()`` would return.
+
+    Why Arrow: ``limit(n).collect()`` plans a ``CollectLimitExec``, whose
+    ``executeTake`` scans a few partitions, then more, one job per
+    scale-up round, until it has ``n`` rows or has read them all, so a
+    multi-partition input under the cap pays several sequential jobs.
+    ``toArrow()`` runs the same limit as one plan over every partition."""
+    with _job(tag):
+        tbl = df.limit(cap + 1).toArrow()
+    return None if tbl.num_rows > cap else tbl
+
+
 # ---------------------------------------------------------------------------
 # text primitives
 
@@ -484,90 +499,90 @@ def connected_components(
     convergence (any node next to the min-labelled set would still change,
     so by connectivity every node carries the component min); the jump only
     accelerates deep components, which converge in ~jump_after +
-    log2(diameter) rounds, while shallow ones never pay the self-join."""
+    log2(diameter) rounds, while shallow ones never pay the self-join.
+
+    A pair list of at most ``driver_solve_max`` rows, as given (duplicates
+    and both directions count), skips the loop: one bounded Arrow collect
+    of the pairs and a union-find at the driver.  Past the cap, or with a
+    null endpoint, the pairs are cached and the loop runs on them."""
     import shutil
     import tempfile
     import uuid
 
     spark = pairs.sparkSession
+    ends = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).cache()
     # Bidirectional edges via ONE explode, not a 2-branch union: the union
     # form plans the (potentially expensive) pairs subtree twice and AQE
     # materializes both branches' stages concurrently with no reuse (their
     # map-side projections canonicalize differently), doubling upstream
     # compute — the r12 event-log probe showed 8 racing materialization
-    # jobs on the minhash-star shape.  explode keeps one subtree.
+    # jobs on the minhash-star shape.  explode keeps one subtree.  Only the
+    # distributed loop reads it; the driver path below works on the pairs.
     edges = (
-        pairs.select(
+        ends.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(a).alias("u"), F.col(b).alias("v")),
-                    F.struct(F.col(b).alias("u"), F.col(a).alias("v")),
+                    F.struct("u", "v"),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
                 )
             ).alias("_e")
         )
         .select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
         .distinct()
-        .cache()
     )
+    # both endpoints widened to one type, as the explode widens them
+    node_t = edges.schema["u"].dataType
     # Round-12 small-graph fast path: every distributed round below costs a
     # fixed multi-stage latency (~1.5s/round on an idle local[32], ~5s for
-    # the 247-edge sf0.1 bench graph).  When the edge list has at most
-    # driver_solve_max rows (a bounded collect: <= ~16 bytes/edge plus
+    # the 247-edge sf0.1 bench graph).  When the pair list has at most
+    # driver_solve_max rows (one bounded collect: <= ~16 bytes/pair plus
     # Python overhead at the 200k default), union-find at the driver gives
-    # the identical min-label components in milliseconds; the label set is
-    # unique per graph, and tests/test_round11_cc_giant_component.py runs
-    # both paths and compares them.
+    # the identical min-label components in milliseconds; it needs neither
+    # both directions nor distinct rows.  The label set is unique per graph,
+    # and tests/test_round11_cc_giant_component.py runs both paths and
+    # compares them.
     base = spill = None
     own_dir = False
     try:
+        tbl = None
         if driver_solve_max and driver_solve_max > 0:
-            # size gate and null-endpoint check in ONE pass over the limited
-            # edge set (r13, ADVICE r12): when the limit covers all edges the
-            # null flag is exact, so a null-edged graph skips straight to the
-            # distributed loop without a wasted full collect
-            probe = edges.limit(driver_solve_max + 1).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.col("u").isNull() | F.col("v").isNull()).alias("has_null"),
+            tbl = _collect_bounded(
+                ends.select(F.col("u").cast(node_t), F.col("v").cast(node_t)),
+                driver_solve_max,
+                "connected_components:edges",
             )
-            with _job("connected_components:size_probe"):
-                probe = probe.first()
-            # null endpoints would need the loop's null-equality semantics —
-            # the probe's has_null flag routes them there WITHOUT collecting
-            if probe["n"] <= driver_solve_max and not probe["has_null"]:
-                with _job("connected_components:edges"):
-                    rows = edges.collect()
-                parent: dict = {}
+        # null endpoints need the loop's null-equality semantics
+        if tbl is not None and tbl.column("u").null_count + tbl.column("v").null_count == 0:
+            parent: dict = {}
 
-                def find(x):
-                    r = x
-                    while parent[r] != r:
-                        r = parent[r]
-                    while parent[x] != r:  # path compression
-                        parent[x], x = r, parent[x]
-                    return r
+            def find(x):
+                r = x
+                while parent[r] != r:
+                    r = parent[r]
+                while parent[x] != r:  # path compression
+                    parent[x], x = r, parent[x]
+                return r
 
-                for u, v in rows:
-                    if u not in parent:
-                        parent[u] = u
-                    if v not in parent:
-                        parent[v] = v
-                    ru, rv = find(u), find(v)
-                    if ru != rv:
-                        parent[ru] = rv
-                out_schema = T.StructType(
-                    [
-                        T.StructField("doc", edges.schema["u"].dataType, True),
-                        T.StructField("cluster", edges.schema["u"].dataType, True),
-                    ]
-                )
-                comp_min: dict = {}
-                for x in parent:
-                    r = find(x)
-                    m = comp_min.get(r)
-                    if m is None or x < m:
-                        comp_min[r] = x
-                data = [(x, comp_min[find(x)]) for x in parent]
-                return spark.createDataFrame(data, out_schema)
+            for u, v in zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist()):
+                if u not in parent:
+                    parent[u] = u
+                if v not in parent:
+                    parent[v] = v
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    parent[ru] = rv
+            out_schema = T.StructType(
+                [T.StructField("doc", node_t, True), T.StructField("cluster", node_t, True)]
+            )
+            comp_min: dict = {}
+            for x in parent:
+                r = find(x)
+                m = comp_min.get(r)
+                if m is None or x < m:
+                    comp_min[r] = x
+            data = [(x, comp_min[find(x)]) for x in parent]
+            return spark.createDataFrame(data, out_schema)
+        edges = edges.cache()
         labels = edges.select("u").distinct().withColumn("lbl", F.col("u"))
         converged = False
         for rnd in range(max_iter):
@@ -656,10 +671,12 @@ def connected_components(
             # remote checkpoint dirs (hdfs://, s3://...) are left to the
             # cluster's temp-dir hygiene — cheap slim files, two paths
         # every path has materialized its labels by now (driver-built
-        # frame or checkpoint), so the edge cache has no reader left; kept,
-        # it is never reused (under the minhash dedups its plan embeds that
-        # call's fresh banded checkpoint) and pins storage for the session
+        # frame or checkpoint), so the pair and edge caches have no reader
+        # left; kept, they are never reused (under the minhash dedups their
+        # plans embed that call's fresh banded checkpoint) and pin storage
+        # for the session
         edges.unpersist()
+        ends.unpersist()
     return labels.select(F.col("u").alias("doc"), F.col("lbl").alias("cluster"))
 
 
@@ -840,20 +857,19 @@ def cosine_topk_bruteforce(
     from pyspark.sql import Window
 
     c = _spread(emb).select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    qrows = None
+    qtbl = None
     if scorer == "arrow":
-        qrows = (
-            queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-            .limit(max_broadcast_queries + 1)
-            .collect()
+        # past the bound there are too many probes to broadcast: join path
+        qtbl = _collect_bounded(
+            queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
+            max_broadcast_queries,
+            "cosine_topk_bruteforce:queries",
         )
-        if len(qrows) > max_broadcast_queries:
-            qrows = None  # too many probes to broadcast — join path below
-    if qrows is not None:
+    if qtbl is not None:
         import numpy as np
 
-        qids = [r["qid"] for r in qrows]
-        qmat = [np.asarray(r["qv"], dtype=np.float64) for r in qrows]
+        qids = qtbl.column("qid").to_pylist()
+        qmat = [np.asarray(v, dtype=np.float64) for v in qtbl.column("qv").to_pylist()]
         # qid keeps the QUERY side's id type (the join path preserved it);
         # typing it from the corpus mis-declares heterogeneous id schemas
         qid_field = queries.schema[id_col].dataType.simpleString()
@@ -1121,20 +1137,19 @@ def embedding_near_dup_pairs(
         # NOTE: this makes construction run one bounded eager Spark job
         # (like quantized_topk's probe collect); corpus ids are assumed
         # unique (both engines' oracles already assume a key).
-        crows = (
-            cs.where(F.col("_v").isNotNull())
-            .limit(max_broadcast_corpus + 1)
-            .collect()
+        ctbl = _collect_bounded(
+            cs.where(F.col("_v").isNotNull()),
+            max_broadcast_corpus,
+            "embedding_near_dup_pairs:corpus",
         )
-        if 0 < len(crows) <= max_broadcast_corpus:
+        if ctbl is not None and ctbl.num_rows > 0:
             import numpy as np
 
-            ids = np.array([r["_id"] for r in crows])
+            ids = np.array(ctbl.column("_id").to_pylist())
             order = np.argsort(ids, kind="stable")
             ids_sorted = ids[order]
-            mat = np.stack(
-                [np.asarray(crows[i]["_v"], dtype=np.float64) for i in order]
-            )
+            vecs = ctbl.column("_v").to_pylist()
+            mat = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in order])
             bc = emb.sparkSession.sparkContext.broadcast((ids_sorted, mat))
             d1_t = cand.schema["d1"].dataType.simpleString()
             d2_t = cand.schema["d2"].dataType.simpleString()

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_spark.llm import _collect_bounded
+
 __all__ = ["quantize_int8", "dequantize_int8", "int8_dot", "quantized_topk"]
 
 
@@ -114,14 +116,14 @@ def quantized_topk(
 
     corpus = prep(emb, "n")
     probes = prep(queries, "q")
-    qrows = probes.limit(max_broadcast_queries + 1).collect()
-    if len(qrows) <= max_broadcast_queries:
+    qtbl = _collect_bounded(probes, max_broadcast_queries, "quantized_topk:queries")
+    if qtbl is not None:
         import numpy as np
         import pandas as pd
 
-        qids = [r["qid"] for r in qrows]
-        qscales = [float(r["qscale"]) for r in qrows]
-        qmat = [np.asarray(r["qq"], dtype=np.int64) for r in qrows]
+        qids = qtbl.column("qid").to_pylist()
+        qscales = [float(x) for x in qtbl.column("qscale").to_pylist()]
+        qmat = [np.asarray(v, dtype=np.int64) for v in qtbl.column("qq").to_pylist()]
         # qid keeps the QUERY side's id type (the join path preserved it);
         # typing it from the corpus mis-declares heterogeneous id schemas
         qid_field = probes.schema["qid"].dataType.simpleString()

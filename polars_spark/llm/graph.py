@@ -5,12 +5,14 @@ Web-curation pipelines use link-graph centrality as a document/domain
 quality prior (Common Crawl publishes harmonic-centrality and PageRank-style
 host rankings; curated corpora weight or filter by them).  The operators
 here are the dataframe-native Pregel shape: one join + one keyed
-aggregation per superstep, ``localCheckpoint`` every few rounds to truncate
-lineage — the same iteration discipline as ``llm.connected_components``.
+aggregation per superstep (messages unioned with a zero message per node,
+so the aggregate alone yields every node's new state), ``localCheckpoint``
+every few rounds to truncate lineage — the same iteration discipline as
+``llm.connected_components``.
 
-Scale notes (100 TB / 10^9-node graphs): every iteration shuffles edge
-contributions once on dst and ranks once on node id — no driver
-materialization of nodes or edges beyond two scalar counts; AQE handles hub
+Scale notes (100 TB / 10^9-node graphs): every iteration shuffles ranks
+once on src for the edge join and the messages once on node id — no driver
+materialization of nodes or edges beyond one scalar count; AQE handles hub
 skew (a giant in-degree node is one hot reduce key — classic salting
 territory if it ever dominates; documented, not pre-salted, since rank
 aggregation is a plain sum and AQE skew-split already applies).
@@ -43,8 +45,11 @@ def pagerank(
     the standard simplification when ranks are used as a RELATIVE quality
     prior (absolute mass conservation doesn't change the ordering).
 
-    Every superstep is: edges ⋈ ranks (shuffle on src) -> groupBy(dst)
-    (shuffle on dst) -> left join onto the node set (shuffle on node).
+    Every superstep is: edges ⋈ ranks (shuffle on src), its contributions
+    unioned with one ``(node, 0.0)`` row per node, then ONE groupBy(node)
+    sum (shuffle on node).  The zero rows give nodes without in-edges their
+    teleport-only rank without a left join back onto the node set, and
+    ``x + 0.0 == x`` keeps every rank bit-identical to the join form.
     Lineage is truncated with localCheckpoint every ``checkpoint_every``
     rounds so plan size stays O(1) per round.
     """
@@ -65,18 +70,21 @@ def pagerank(
         # empty edge list: a valid (empty) rank frame, not ZeroDivisionError
         return nodes.withColumn("rank", F.lit(0.0))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    # one 0.0 row per node: nodes without in-edges still get a group, and
+    # x + 0.0 == x leaves every other sum bit-identical
+    zeros = nodes.select("node", F.lit(0.0).alias("c"))
     for i in range(iters):
-        contribs = (
-            out_e.join(ranks.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("in_sum"))
+        contribs = out_e.join(ranks.withColumnRenamed("node", "u"), "u").select(
+            F.col("v").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
         )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-            ).alias("rank"),
+        ranks = (
+            contribs.unionByName(zeros)
+            .groupBy("node")
+            .agg(F.sum("c").alias("in_sum"))
+            .select(
+                "node",
+                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("in_sum")).alias("rank"),
+            )
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
             ranks = _materialize(ranks, "pagerank:ranks")

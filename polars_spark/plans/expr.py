@@ -17,6 +17,7 @@ from __future__ import annotations
 import re
 
 import datetime as _dt
+import decimal as _decimal
 from collections.abc import Iterable
 from typing import Any, Callable
 
@@ -72,9 +73,10 @@ def _reference_type(c: Column, known: dict):
 
 # What may carry a value of each kind into an expression, matched against
 # its SQL text: the type's name (casts, typed literals, constructors such as
-# make_dt_interval), how Spark prints the kind's untyped literals (a Decimal
-# prints like a double, a timedelta as PT24H, a string quoted), and for
-# booleans every comparison, connective and predicate function.
+# make_dt_interval; a Decimal literal carries its cast, see _typed_lit), how
+# Spark prints the kind's untyped literals (a timedelta as PT24H, a string
+# quoted), and for booleans every comparison, connective and predicate
+# function.
 _KIND_MARKERS = {
     k: re.compile(p, re.IGNORECASE)
     for k, p in {
@@ -82,13 +84,28 @@ _KIND_MARKERS = {
         r"|\w*like|regexp\w*|contains|startswith|endswith|exists|forall|array_contains"
         r"|arrays_overlap|map_contains_key|bool_\w+|every|some|any|equal_null)\b",
         "interval": r"interval|\bPT-?\d",
-        "decimal": r"decimal|\d\.\d|\dE-?\d",
+        "decimal": r"decimal",
         "date": r"date|\d{4}-\d\d-\d\d",
         "timestamp": r"timestamp|\d{4}-\d\d-\d\d",
         "time": r"time(?!stamp)|\d\d:\d\d",
         "string": r"string|'",
     }.items()
 }
+
+
+def _typed_lit(v) -> Column:
+    """``F.lit(v)``, with a Decimal cast to the very ``decimal(p,s)`` Spark
+    gives it, a cast the optimizer folds away.  Untyped, a Decimal literal
+    prints like a double (``1.5``), so ``ExprContext.may_be`` could tell a
+    decimal operand from ``* 0.1`` only by probing both."""
+    c = F.lit(v)
+    if isinstance(v, _decimal.Decimal) and v.is_finite():
+        _sign, digits, exp = v.as_tuple()
+        scale = max(-exp, 0)
+        prec = max(len(digits) + max(exp, 0), scale)
+        if prec <= 38:
+            c = c.cast(f"decimal({prec},{scale})")
+    return c
 
 
 class ExprContext:
@@ -4212,7 +4229,7 @@ class Expr:
             out = None
             for k, v in mapping.items():
                 cond = c.isNull() if k is None else (c == F.lit(k))
-                out = F.when(cond, F.lit(v)) if out is None else out.when(cond, F.lit(v))
+                out = F.when(cond, _typed_lit(v)) if out is None else out.when(cond, _typed_lit(v))
             if default is None:
                 return out.otherwise(c)
             return out.otherwise(_col_of(default, ctx))
@@ -4247,7 +4264,7 @@ class Expr:
             out = None
             for k, v in mapping.items():
                 cond = c.isNull() if k is None else (c == F.lit(k))
-                out = F.when(cond, F.lit(v)) if out is None else out.when(cond, F.lit(v))
+                out = F.when(cond, _typed_lit(v)) if out is None else out.when(cond, _typed_lit(v))
             if default is not _NO_DEFAULT:
                 return out.otherwise(_col_of(default, ctx))
             err = F.raise_error(
@@ -4872,10 +4889,9 @@ def lit(v, dtype=None) -> Expr:
             from polars_spark.session import ensure_time_type
 
             ensure_time_type(getattr(getattr(ctx, "df", None), "sparkSession", None))
-        c = F.lit(v)
-        if spark_ddl is not None:
-            c = c.cast(spark_ddl)
-        return c
+        if spark_ddl is None:
+            return _typed_lit(v)
+        return F.lit(v).cast(spark_ddl)
 
     return Expr(fn, "literal")
 

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql import functions as F
 
-from polars_spark.plans.expr import ExprContext
+from polars_spark.plans.expr import ExprContext, _typed_lit
 from tests.test_plan_shapes import SF_DIR
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "polars_spark"
@@ -68,13 +68,15 @@ def ctx(spark):
         (lambda: F.col("t"), ("boolean",), True),
         (lambda: F.make_dt_interval(F.lit(1)), ("interval",), True),
         (lambda: F.lit(datetime.timedelta(days=1)), ("interval",), True),
-        (lambda: F.lit(decimal.Decimal("1.5")), ("decimal",), True),
+        (lambda: _typed_lit(decimal.Decimal("1.5")), ("decimal",), True),
         (lambda: F.col("d") - F.col("d"), SUM_KINDS, True),
         (lambda: F.col("s"), ("string",), True),
         (lambda: F.col("a"), SUM_KINDS, False),
         (lambda: F.col("a") * (1 - F.col("b")), SUM_KINDS, False),
         (lambda: F.col("a") / F.lit(2), ("decimal", "date"), False),
         (lambda: F.hour(F.col("ts")), ("time",), False),
+        (lambda: F.col("a") * F.lit(0.1), ("decimal",), False),
+        (lambda: F.col("a") / F.lit(1e-7), ("decimal",), False),
     ],
 )
 def test_may_be(ctx, make, kinds, expected):
@@ -103,6 +105,28 @@ def test_relational_build_starts_no_probe(spark, probes, name):
 
     QUERIES[name](spark, SF_DIR)
     assert probes == []
+
+
+# A fractional double literal is no decimal marker: q9's ``0.1 *`` and
+# ``/ 100.0`` and the ewm query's double arithmetic start none.  q9's one
+# probe is the ``round`` of a computed column.
+FRACTIONAL_LITERAL_PROBES = {"q9_product_type_profit": 1, "win_ewm_long_series": 0}
+
+
+@pytest.mark.parametrize("name", sorted(FRACTIONAL_LITERAL_PROBES))
+def test_fractional_literals_start_no_probe(spark, probes, name):
+    from polars_spark.queries import QUERIES
+
+    QUERIES[name](spark, SF_DIR)
+    assert len(probes) == FRACTIONAL_LITERAL_PROBES[name]
+
+
+def test_decimal_literal_keeps_its_type(spark, pl):
+    df = spark.range(1)
+    for v in ("1.5", "0.05", "1.50", "-0", "1E+2", "0E-10"):
+        d = decimal.Decimal(v)
+        assert df.select(_typed_lit(d)).schema[0].dataType == df.select(F.lit(d)).schema[0].dataType
+    assert "decimal" in str(pl.lit(decimal.Decimal("1.5"))._resolve(ExprContext(df))).lower()
 
 
 def test_bare_column_lowerings_start_no_probe(pl, lf, probes):

@@ -28,7 +28,7 @@ CHECKPOINTS = {
 # must justify itself here or go through _materialize
 PINS = {
     ("llm/__init__.py", "_banded_corpus"),  # shingle sets, reused by an identical re-call
-    ("llm/__init__.py", "connected_components"),  # edges, unpersisted in a finally
+    ("llm/__init__.py", "connected_components"),  # pairs, and edges for the loop: unpersisted in a finally
     ("llm/__init__.py", "dedup_against_index"),  # new batch's shingle sets: band pass + verify
     ("llm/graph.py", "pagerank"),  # edges, nodes, out-degrees: read every round
     ("llm/retrieval.py", "bm25_topk"),  # postings: three aggregates + the scoring join

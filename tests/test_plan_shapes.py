@@ -101,8 +101,10 @@ def test_join_strategies(plans, name):
 # job; a scan that fell back to schema inference would add one job per scan
 # (q5 makes six).  The three curation queries count their eager checkpoints
 # and driver collects, which _materialize/_job name without adding a job.
+# dedup_minhash_star 6 -> 5: connected components reads its pairs in one
+# bounded collect instead of a size probe plus an edge collect.
 JOB_PINS = {
-    "dedup_minhash_star": 6,
+    "dedup_minhash_star": 5,
     "q1_pricing_summary": 1,
     "q5_local_supplier_volume": 5,
     "q6_forecast_revenue": 1,
@@ -110,25 +112,49 @@ JOB_PINS = {
     "sim_ivf_topk": 6,
     "web_pagerank": 6,
 }
+# the curation queries again with AQE on over 4 shuffle partitions, where
+# every shuffle stage is a job of its own, so a stage a superstep or a probe
+# no longer needs shows: connected components' size probe (14 -> 11 on the
+# star) and PageRank's per-superstep left join back onto the nodes (22 -> 19)
+AQE_JOB_PINS = {"dedup_minhash_star": 11, "sim_ivf_topk": 10, "web_pagerank": 19}
 
 
-@pytest.mark.parametrize("name", sorted(JOB_PINS))
-def test_job_ceiling(spark, name):
+def _build_jobs(spark, name, **conf) -> int:
+    """Jobs one cold build + noop write of ``name`` starts."""
     import uuid
 
     from polars_spark.queries import QUERIES
 
     s = spark.newSession()
     s.catalog.clearCache()
+    for k, v in conf.items():
+        s.conf.set(k, v)
     sc = spark.sparkContext
     group = f"job-ceiling-{name}-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         QUERIES[name](s, SF_DIR).write.format("noop").mode("overwrite").save()
-        got = len(sc.statusTracker().getJobIdsForGroup(group))
+        return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("name", sorted(JOB_PINS))
+def test_job_ceiling(spark, name):
+    got = _build_jobs(spark, name)
     assert got <= JOB_PINS[name], (
         f"{name}: {got} jobs > pinned ceiling {JOB_PINS[name]} — a new eager "
         "job or an inferring scan entered the query; justify and re-pin or fix"
+    )
+
+
+@pytest.mark.parametrize("name", sorted(AQE_JOB_PINS))
+def test_job_ceiling_aqe(spark, name):
+    got = _build_jobs(
+        spark, name,
+        **{"spark.sql.adaptive.enabled": "true", "spark.sql.shuffle.partitions": "4"},
+    )
+    assert got <= AQE_JOB_PINS[name], (
+        f"{name}: {got} jobs > pinned AQE ceiling {AQE_JOB_PINS[name]} — a new "
+        "eager job or shuffle stage entered the query; justify and re-pin or fix"
     )

@@ -20,6 +20,7 @@ Non-convergence now RAISES instead of returning silently-wrong labels.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -117,3 +118,70 @@ def test_giant_component_shares_one_split(spark):
         for r in out.filter(F.col("doc_id").isin(ids)).select("split").distinct().collect()
     }
     assert len(splits) == 1, splits
+
+
+def _cc_jobs(spark, pairs, **kw):
+    """(labels as a set, descriptions of the jobs connected_components
+    starts while building them)."""
+    from polars_spark.llm import connected_components
+    from tests.test_materialize import _descriptions, _group
+
+    sc = spark.sparkContext
+    with _group(sc, "cc") as group:
+        cc = connected_components(pairs, **kw)
+        descs = _descriptions(sc, group)
+    return {(r.doc, r.cluster) for r in cc.collect()}, descs
+
+
+def test_driver_path_is_one_bounded_collect(spark):
+    """The driver path reads the pairs once, in one bounded collect: one
+    ``connected_components:edges`` job, no size probe before it."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (9, 8), (8, 9), (8, 9)], "d1 long, d2 long"
+    )
+    got, descs = _cc_jobs(spark, pairs)
+    assert descs == ["connected_components:edges"]
+    assert got == {(1, 1), (2, 1), (3, 1), (8, 8), (9, 8)}
+
+
+@pytest.mark.parametrize("rows, null_end, loop", [(6, False, False), (7, False, True), (6, True, True)])
+def test_driver_solve_max_bounds_pair_rows(spark, rows, null_end, loop):
+    """Exactly ``driver_solve_max`` pair rows, duplicates and both
+    directions counted as given, take the driver path; one more row, or a
+    null endpoint, takes the distributed loop.  Every path gives the labels
+    the loop alone (driver_solve_max=0) gives."""
+    data = [(1, 2), (2, 1), (2, 1), (3, 4), (5, 5), (6, 4), (4, 7)][:rows]
+    if null_end:
+        data[-1] = (6, None)
+    pairs = spark.createDataFrame(data, "d1 long, d2 long")
+    got, descs = _cc_jobs(spark, pairs, driver_solve_max=6)
+    assert descs.count("connected_components:edges") == 1
+    assert ("connected_components:converged" in descs) is loop
+    assert set(descs) <= {
+        "connected_components:edges",
+        "connected_components:round",
+        "connected_components:converged",
+    }
+    assert got == _cc_jobs(spark, pairs, driver_solve_max=0)[0]
+
+
+# jobs the driver path started on a 32-file parquet pairs source when it
+# ran a size probe and then collected the edges: AQE splits the probe's
+# limit + aggregate into one job per stage
+PARENT_DRIVER_JOBS = {("true", "4"): 5, ("true", "32"): 5, ("false", "4"): 2, ("false", "32"): 2}
+
+
+@pytest.mark.parametrize("aqe, parts", sorted(PARENT_DRIVER_JOBS))
+def test_driver_path_jobs_on_multi_file_source(spark, tmp_path_factory, aqe, parts):
+    path = str(tmp_path_factory.getbasetemp() / "cc_pairs_32")
+    if not os.path.isdir(path):
+        spark.range(0, 600).selectExpr("id * 2 AS d1", "id * 2 + 1 AS d2").repartition(
+            32
+        ).write.parquet(path)
+    s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", aqe)
+    s.conf.set("spark.sql.shuffle.partitions", parts)
+    got, descs = _cc_jobs(s, s.read.parquet(path))
+    assert descs == ["connected_components:edges"]
+    assert len(descs) <= PARENT_DRIVER_JOBS[(aqe, parts)]
+    assert len(got) == 1200 and all(c == d - d % 2 for d, c in got)
