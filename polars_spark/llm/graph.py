@@ -49,7 +49,7 @@ def pagerank(
     unioned with one ``(node, 0.0)`` row per node, then ONE groupBy(node)
     sum (shuffle on node).  The zero rows give nodes without in-edges their
     teleport-only rank without a left join back onto the node set, and
-    ``x + 0.0 == x`` keeps every rank bit-identical to the join form.
+    change no sum (``x + 0.0 == x``).
     Lineage is truncated with localCheckpoint every ``checkpoint_every``
     rounds so plan size stays O(1) per round.
     """
@@ -71,7 +71,7 @@ def pagerank(
         return nodes.withColumn("rank", F.lit(0.0))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     # one 0.0 row per node: nodes without in-edges still get a group, and
-    # x + 0.0 == x leaves every other sum bit-identical
+    # x + 0.0 == x leaves every other sum as it was
     zeros = nodes.select("node", F.lit(0.0).alias("c"))
     for i in range(iters):
         contribs = out_e.join(ranks.withColumnRenamed("node", "u"), "u").select(

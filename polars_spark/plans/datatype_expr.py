@@ -227,12 +227,15 @@ class DataTypeExpr:
             ctx = ExprContext(context._df)
         elif isinstance(context, dict):
             if context:
+                from pyspark.sql import SparkSession
+
                 from polars_spark.session import get_spark
 
                 ddl = ", ".join(
                     f"`{k}` {_dtype_to_spark(v)}" for k, v in context.items()
                 )
-                ctx = ExprContext(get_spark().createDataFrame([], ddl))
+                spark = SparkSession.getActiveSession() or get_spark()
+                ctx = ExprContext(spark.createDataFrame([], ddl))
             else:
                 ctx = None
         else:

@@ -4229,7 +4229,8 @@ class Expr:
             out = None
             for k, v in mapping.items():
                 cond = c.isNull() if k is None else (c == F.lit(k))
-                out = F.when(cond, _typed_lit(v)) if out is None else out.when(cond, _typed_lit(v))
+                lv = _typed_lit(v)
+                out = F.when(cond, lv) if out is None else out.when(cond, lv)
             if default is None:
                 return out.otherwise(c)
             return out.otherwise(_col_of(default, ctx))
@@ -4264,7 +4265,8 @@ class Expr:
             out = None
             for k, v in mapping.items():
                 cond = c.isNull() if k is None else (c == F.lit(k))
-                out = F.when(cond, _typed_lit(v)) if out is None else out.when(cond, _typed_lit(v))
+                lv = _typed_lit(v)
+                out = F.when(cond, lv) if out is None else out.when(cond, lv)
             if default is not _NO_DEFAULT:
                 return out.otherwise(_col_of(default, ctx))
             err = F.raise_error(
@@ -5038,9 +5040,14 @@ class ExprMetaNamespace:
 
     def _node(self):
         """The unresolved Spark ColumnNode tree (classic mode)."""
+        from pyspark.sql import SparkSession
+
         from polars_spark.session import get_spark
 
-        get_spark()  # F.col needs an active JVM even for unresolved trees
+        # F.col needs an active JVM even for unresolved trees; get_spark()
+        # on a live session would set its default confs over the caller's
+        if SparkSession.getActiveSession() is None:
+            get_spark()
         return self._e._resolve(_MetaContext())._jc.node()
 
     def root_names(self) -> list[str]:

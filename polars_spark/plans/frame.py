@@ -2931,7 +2931,7 @@ class LazyFrame:
             raise ValueError("deserialize: not a polars_spark binary frame payload")
         from polars_spark.session import get_spark
 
-        spark = get_spark()
+        spark = SparkSession.getActiveSession() or get_spark()
         sdf = spark.createDataFrame(data["rows"] or [], schema=data["ddl"])
         out = LazyFrame(sdf)
         return LazyFrame(out.with_row_index(ROW_IDX)._df, [(ROW_IDX, False)])

@@ -53,6 +53,17 @@ def lf(pl, spark):
     return make
 
 
+def make_active(spark) -> None:
+    """Make ``spark`` the active session again.  PySpark's createDataFrame
+    makes its session the active one, so a test whose child newSession()
+    builds a frame leaves that child active, and frames later tests build
+    from the active session (from_pandas, scans) would run under its confs."""
+    from pyspark.sql import SparkSession
+
+    SparkSession._activeSession = spark
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(spark._jsparkSession)
+
+
 def rows(frame, *, sort_by=None) -> list[tuple]:
     """Materialize a LazyFrame to a list of tuples (NaN -> None)."""
     pdf = frame.collect()

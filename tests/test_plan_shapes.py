@@ -101,8 +101,6 @@ def test_join_strategies(plans, name):
 # job; a scan that fell back to schema inference would add one job per scan
 # (q5 makes six).  The three curation queries count their eager checkpoints
 # and driver collects, which _materialize/_job name without adding a job.
-# dedup_minhash_star 6 -> 5: connected components reads its pairs in one
-# bounded collect instead of a size probe plus an edge collect.
 JOB_PINS = {
     "dedup_minhash_star": 5,
     "q1_pricing_summary": 1,
@@ -113,17 +111,20 @@ JOB_PINS = {
     "web_pagerank": 6,
 }
 # the curation queries again with AQE on over 4 shuffle partitions, where
-# every shuffle stage is a job of its own, so a stage a superstep or a probe
-# no longer needs shows: connected components' size probe (14 -> 11 on the
-# star) and PageRank's per-superstep left join back onto the nodes (22 -> 19)
+# every shuffle stage is a job of its own, so a stage a superstep or a
+# probe adds shows here even when it is no job of its own with AQE off
 AQE_JOB_PINS = {"dedup_minhash_star": 11, "sim_ivf_topk": 10, "web_pagerank": 19}
 
 
 def _build_jobs(spark, name, **conf) -> int:
-    """Jobs one cold build + noop write of ``name`` starts."""
+    """Jobs one cold build + noop write of ``name`` starts.  The frames it
+    pins are dropped after, and ``spark`` is the active session again: the
+    cache manager is shared by every session, and a pin or an active session
+    planned under ``conf`` would run under it in later tests."""
     import uuid
 
     from polars_spark.queries import QUERIES
+    from tests.conftest import make_active
 
     s = spark.newSession()
     s.catalog.clearCache()
@@ -137,6 +138,8 @@ def _build_jobs(spark, name, **conf) -> int:
         return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        s.catalog.clearCache()
+        make_active(spark)
 
 
 @pytest.mark.parametrize("name", sorted(JOB_PINS))

@@ -26,6 +26,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import make_active
+
 
 def test_path_graph_converges_single_component(spark):
     # driver_solve_max=0 forces the DISTRIBUTED loop (round 12 added a
@@ -165,13 +167,11 @@ def test_driver_solve_max_bounds_pair_rows(spark, rows, null_end, loop):
     assert got == _cc_jobs(spark, pairs, driver_solve_max=0)[0]
 
 
-# jobs the driver path started on a 32-file parquet pairs source when it
-# ran a size probe and then collected the edges: AQE splits the probe's
-# limit + aggregate into one job per stage
-PARENT_DRIVER_JOBS = {("true", "4"): 5, ("true", "32"): 5, ("false", "4"): 2, ("false", "32"): 2}
-
-
-@pytest.mark.parametrize("aqe, parts", sorted(PARENT_DRIVER_JOBS))
+# One job at every conf: a bounded limit over a multi-partition source
+# could start one job per stage under AQE, or one per scale-up round of a
+# CollectLimitExec.
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("parts", ["4", "32"])
 def test_driver_path_jobs_on_multi_file_source(spark, tmp_path_factory, aqe, parts):
     path = str(tmp_path_factory.getbasetemp() / "cc_pairs_32")
     if not os.path.isdir(path):
@@ -181,7 +181,9 @@ def test_driver_path_jobs_on_multi_file_source(spark, tmp_path_factory, aqe, par
     s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", aqe)
     s.conf.set("spark.sql.shuffle.partitions", parts)
-    got, descs = _cc_jobs(s, s.read.parquet(path))
+    try:
+        got, descs = _cc_jobs(s, s.read.parquet(path))
+    finally:
+        make_active(spark)  # the driver path's createDataFrame made s active
     assert descs == ["connected_components:edges"]
-    assert len(descs) <= PARENT_DRIVER_JOBS[(aqe, parts)]
     assert len(got) == 1200 and all(c == d - d % 2 for d, c in got)

@@ -216,6 +216,19 @@ class TestEnumMeta:
         assert e.meta.root_names() == ["a", "b"]
         assert pl.col("v").shift(1).meta.root_names() == ["v"]
 
+    def test_meta_keeps_the_session_confs(self, pl, spark):
+        # meta walks (and the ewm hoist of every select) reuse the live
+        # session: re-running its builder would reset AQE and the shuffle
+        # partition count to the engine defaults under the caller
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        try:
+            before = dict(spark.sql("SET").collect())
+            pl.col("x").ewm_mean(span=3).meta.root_names()
+            assert pl.dtype_of("a").collect_dtype({"a": pl.String}) is pl.String
+            assert dict(spark.sql("SET").collect()) == before
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", "1")
+
     def test_meta_eq_undo_aliases_is_column(self, pl):
         e = (pl.col("a") * 2 + pl.col("b")).alias("z")
         assert e.meta.eq((pl.col("a") * 2 + pl.col("b")).alias("z"))
