@@ -452,6 +452,10 @@ def token_doc_frequency(df: DataFrame, *, id_col: str = "doc_id", text_col: str 
     )
 
 
+_CC_SPILL_AFTER = 8  # connected_components: first round spilled to parquet
+_CC_JUMP_AFTER = 3  # connected_components: first round with a pointer jump
+
+
 def connected_components(
     pairs: DataFrame,
     *,
@@ -459,8 +463,6 @@ def connected_components(
     b: str = "d2",
     max_iter: int = 64,
     checkpoint_dir: str | None = None,
-    spill_after: int = 8,
-    jump_after: int = 3,
     driver_solve_max: int | None = 200_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list -> (doc, cluster)
@@ -480,7 +482,7 @@ def connected_components(
     materialization.  Raises if max_iter rounds pass without a fixed point
     rather than returning silently-wrong labels.
 
-    Rounds before ``spill_after`` are checkpointed (``_materialize``); later
+    Rounds before ``_CC_SPILL_AFTER`` are checkpointed (``_materialize``); later
     rounds are written to parquet and read back.  A checkpoint keeps the
     plan's ESTIMATED statistics, and the label self-join squares the
     ``sizeInBytes`` BigInt every round (~20*2^r digits at round r), so deep
@@ -494,11 +496,11 @@ def connected_components(
     storage on a cluster); spilled labels are checkpointed once at the end
     so it can be deleted.
 
-    The pointer jump is skipped before round ``jump_after`` (round 12).
+    The pointer jump is skipped before round ``_CC_JUMP_AFTER`` (round 12).
     That is safe: a fixed point of plain neighbor-min propagation IS full
     convergence (any node next to the min-labelled set would still change,
     so by connectivity every node carries the component min); the jump only
-    accelerates deep components, which converge in ~jump_after +
+    accelerates deep components, which converge in ~_CC_JUMP_AFTER +
     log2(diameter) rounds, while shallow ones never pay the self-join.
 
     A pair list of at most ``driver_solve_max`` rows, as given (duplicates
@@ -598,7 +600,7 @@ def connected_components(
             # Young rounds skip it (see docstring: a neighbor-only fixed
             # point is already correct; the jump only accelerates deep
             # components, so shallow ones never pay the self-join).
-            if rnd < jump_after:
+            if rnd < _CC_JUMP_AFTER:
                 jump = labels.select("u", F.col("lbl").alias("plbl"))
             else:
                 jump = labels.join(
@@ -629,7 +631,7 @@ def connected_components(
                 )
                 .withColumnRenamed("new", "lbl")
             )
-            if rnd < spill_after:
+            if rnd < _CC_SPILL_AFTER:
                 # early rounds: the stats BigInt is still small — a plain
                 # eager checkpoint is cheaper than file I/O
                 staged = _materialize(staged, "connected_components:round")

@@ -26,6 +26,8 @@ from polars_spark.llm import _job, _materialize
 
 __all__ = ["pagerank", "degree_stats"]
 
+_CHECKPOINT_EVERY = 5  # pagerank rounds between lineage cuts
+
 
 def pagerank(
     edges: DataFrame,
@@ -34,7 +36,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """PageRank over a directed edge list -> (node, rank).
 
@@ -50,7 +51,7 @@ def pagerank(
     sum (shuffle on node).  The zero rows give nodes without in-edges their
     teleport-only rank without a left join back onto the node set, and
     change no sum (``x + 0.0 == x``).
-    Lineage is truncated with localCheckpoint every ``checkpoint_every``
+    Lineage is truncated with localCheckpoint every ``_CHECKPOINT_EVERY``
     rounds so plan size stays O(1) per round.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct().cache()
@@ -86,7 +87,7 @@ def pagerank(
                 (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("in_sum")).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < iters:
             ranks = _materialize(ranks, "pagerank:ranks")
     return ranks
 

@@ -14,6 +14,7 @@ order contract is threaded (SURVEY.md §1.1 "row order" gap).
 
 from __future__ import annotations
 
+import math
 import re
 
 import datetime as _dt
@@ -276,46 +277,113 @@ def _gather_oob_guard(arr: Column, idx: Column, val: Column) -> Column:
     ).otherwise(val)
 
 
-def _ewm_var_moment_fold(d, min_samples, fin_of, *, from_struct):
-    """adjust=True EW-variance fold over a prefix that may carry NULL
-    elements (ignore_nulls=False): non-null steps keep the historical
-    (s1·d + x, ...) op order bit-identical, null steps decay every weight
-    (reference cov.rs `weight *= 1-alpha` on null rows)."""
-    acc0 = F.struct(
-        F.lit(0.0).alias("s1"), F.lit(0.0).alias("s0"),
-        F.lit(0.0).alias("s2"), F.lit(0.0).alias("sx2"),
-        F.lit(0).alias("nn"),
-    )
+def _ewm_alpha(com, span, half_life, alpha) -> float:
+    """The smoothing factor of an ewm call, by the reference rules
+    (polars ``_prepare_alpha``): exactly one of the four, range-checked."""
+    if sum(p is not None for p in (com, span, half_life, alpha)) > 1:
+        raise ValueError("parameters `com`, `span`, `half_life`, and `alpha` are mutually exclusive")
+    if com is not None:
+        if com < 0.0:
+            raise ValueError(f"require `com` >= 0 (found {com!r})")
+        return 1.0 / (1.0 + com)
+    if span is not None:
+        if span < 1.0:
+            raise ValueError(f"require `span` >= 1 (found {span!r})")
+        return 2.0 / (span + 1.0)
+    if half_life is not None:
+        if half_life <= 0.0:
+            raise ValueError(f"require `half_life` > 0 (found {half_life!r})")
+        return 1.0 - math.exp(-math.log(2.0) / half_life)
+    if alpha is None:
+        raise ValueError("one of `com`, `span`, `half_life`, or `alpha` must be set")
+    if not 0.0 < alpha <= 1.0:
+        raise ValueError(f"require 0 < `alpha` <= 1 (found {alpha!r})")
+    return float(alpha)
+
+
+# The ewm recurrences (polars-compute/src/ewm/), each written once as an
+# ``(init, step, fin)`` triple for ``_ewm_fold``: ``init`` maps state fields
+# to start values, ``step(acc, s)`` gives the next state fields for struct
+# element ``s`` (``s["x"]`` may be null: a null decays the weights, the
+# reference ``ignore_nulls=False`` rule), ``fin(acc)`` is the output.  The
+# op order on non-null elements is the one ``frame._ewm_spec_loop`` replays.
+
+
+def _ewm_mean_adjust(d):
+    def step(acc, s):
+        x = s["x"]
+        return {
+            "num": F.when(x.isNull(), acc["num"] * d).otherwise(acc["num"] * d + x),
+            "den": F.when(x.isNull(), acc["den"] * d).otherwise(acc["den"] * d + 1.0),
+        }
+
+    return {"num": 0.0, "den": 0.0}, step, lambda acc: acc["num"] / acc["den"]
+
+
+def _ewm_mean_rec(d, alpha):
+    """y = x first; y·d + a·x while the weight is 1; after a null gap has
+    decayed the weight w, y + (x - y)·a/(w·d + a) (reference mean.rs)."""
 
     def step(acc, s):
-        x = s["x"] if from_struct else s
+        x = s["x"]
+        first = acc["nn"] == 0
+        return {
+            "y": F.when(x.isNull(), acc["y"])
+            .when(first, x)
+            .when(acc["w"] == 1.0, acc["y"] * d + alpha * x)
+            .otherwise(acc["y"] + (x - acc["y"]) * (alpha / (acc["w"] * d + alpha))),
+            "w": F.when(x.isNull(), F.when(first, acc["w"]).otherwise(acc["w"] * d))
+            .otherwise(F.lit(1.0)),
+        }
+
+    return {"y": 0.0, "w": 1.0}, step, lambda acc: acc["y"]
+
+
+def _ewm_sum(d):
+    def step(acc, s):
+        x = s["x"]
+        return {"s": F.when(x.isNull(), acc["s"] * d).otherwise(acc["s"] * d + x)}
+
+    return {"s": 0.0}, step, lambda acc: acc["s"]
+
+
+def _ewm_var_out(varb, ws, wss, bias, std):
+    """(Σw)²/((Σw)² − Σw²) bias correction, clamp at 0, sqrt for std."""
+    if not bias:
+        denom = ws * ws - wss
+        varb = F.when(denom > 0, varb * ws * ws / denom)
+    varb = F.greatest(varb, F.lit(0.0))
+    return F.sqrt(varb) if std else varb
+
+
+def _ewm_var_moments(d, bias, std):
+    """adjust=True: weighted moments (Σw·x, Σw, Σw², Σw·x²)."""
+
+    def step(acc, s):
+        x = s["x"]
         isnull = x.isNull()
-        return F.struct(
-            F.when(isnull, acc["s1"] * d).otherwise(acc["s1"] * d + x).alias("s1"),
-            F.when(isnull, acc["s0"] * d).otherwise(acc["s0"] * d + 1.0).alias("s0"),
-            F.when(isnull, acc["s2"] * d * d).otherwise(acc["s2"] * d * d + 1.0).alias("s2"),
-            F.when(isnull, acc["sx2"] * d).otherwise(acc["sx2"] * d + x * x).alias("sx2"),
-            (acc["nn"] + F.when(isnull, 0).otherwise(1)).alias("nn"),
-        )
+        return {
+            "s1": F.when(isnull, acc["s1"] * d).otherwise(acc["s1"] * d + x),
+            "s0": F.when(isnull, acc["s0"] * d).otherwise(acc["s0"] * d + 1.0),
+            "s2": F.when(isnull, acc["s2"] * d * d).otherwise(acc["s2"] * d * d + 1.0),
+            "sx2": F.when(isnull, acc["sx2"] * d).otherwise(acc["sx2"] * d + x * x),
+        }
 
     def fin(acc):
-        return F.when(acc["nn"] >= min_samples, fin_of(acc))
+        m = acc["s1"] / acc["s0"]
+        return _ewm_var_out(acc["sx2"] / acc["s0"] - m * m, acc["s0"], acc["s2"], bias, std)
 
-    return acc0, step, fin
+    return {"s1": 0.0, "s0": 0.0, "s2": 0.0, "sx2": 0.0}, step, fin
 
 
-def _ewm_var_rec_fold(d, alpha, bias, std, min_samples, *, from_struct):
-    """adjust=False EW-variance fold: the EXACT reference recursion
-    (polars-compute/src/ewm/cov.rs with x==y) — per-step ws/wss/weight
-    normalization makes the accumulated past count as weight exactly 1,
-    which a raw weighted-moment fold cannot reproduce after a null gap."""
-    acc0 = F.struct(
-        F.lit(0.0).alias("mean"), F.lit(0.0).alias("cov"), F.lit(1.0).alias("w"),
-        F.lit(0.0).alias("ws"), F.lit(0.0).alias("wss"), F.lit(0).alias("nn"),
-    )
+def _ewm_var_rec(d, alpha, bias, std):
+    """adjust=False: the reference recursion (cov.rs with x == y).  The
+    per-step ws/wss/weight normalization makes the accumulated past count as
+    weight exactly 1, which a raw weighted-moment fold cannot reproduce
+    after a null gap."""
 
     def step(acc, s):
-        x = s["x"] if from_struct else s
+        x = s["x"]
         isnull = x.isNull()
         first = acc["nn"] == 0
         wd = acc["w"] * d
@@ -325,35 +393,107 @@ def _ewm_var_rec_fold(d, alpha, bias, std, min_samples, *, from_struct):
             wd * (acc["cov"] + (acc["mean"] - nm) * (acc["mean"] - nm))
             + alpha * (x - nm) * (x - nm)
         ) / nw
-        nws = (acc["ws"] * d + alpha) / nw
-        nwss = (acc["wss"] * d * d + alpha * alpha) / (nw * nw)
-        return F.struct(
-            F.when(isnull, acc["mean"]).when(first, x).otherwise(nm).alias("mean"),
-            F.when(isnull, acc["cov"]).when(first, F.lit(0.0)).otherwise(ncov).alias("cov"),
-            F.when(isnull, F.when(first, acc["w"]).otherwise(wd))
-            .otherwise(F.lit(1.0))
-            .alias("w"),
-            F.when(isnull, F.when(first, acc["ws"]).otherwise(acc["ws"] * d))
+        return {
+            "mean": F.when(isnull, acc["mean"]).when(first, x).otherwise(nm),
+            "cov": F.when(isnull, acc["cov"]).when(first, F.lit(0.0)).otherwise(ncov),
+            "w": F.when(isnull, F.when(first, acc["w"]).otherwise(wd)).otherwise(F.lit(1.0)),
+            "ws": F.when(isnull, F.when(first, acc["ws"]).otherwise(acc["ws"] * d))
             .when(first, F.lit(1.0))
-            .otherwise(nws)
-            .alias("ws"),
-            F.when(isnull, F.when(first, acc["wss"]).otherwise(acc["wss"] * d * d))
+            .otherwise((acc["ws"] * d + alpha) / nw),
+            "wss": F.when(isnull, F.when(first, acc["wss"]).otherwise(acc["wss"] * d * d))
             .when(first, F.lit(1.0))
-            .otherwise(nwss)
-            .alias("wss"),
-            (acc["nn"] + F.when(isnull, 0).otherwise(1)).alias("nn"),
-        )
+            .otherwise((acc["wss"] * d * d + alpha * alpha) / (nw * nw)),
+        }
 
     def fin(acc):
-        varb = acc["cov"]
-        if not bias:
-            denom = acc["ws"] * acc["ws"] - acc["wss"]
-            varb = F.when(denom > 0, varb * acc["ws"] * acc["ws"] / denom)
-        varb = F.greatest(varb, F.lit(0.0))
-        r = F.sqrt(varb) if std else varb
-        return F.when(acc["nn"] >= min_samples, r)
+        return _ewm_var_out(acc["cov"], acc["ws"], acc["wss"], bias, std)
 
-    return acc0, step, fin
+    init = {"mean": 0.0, "cov": 0.0, "w": 1.0, "ws": 0.0, "wss": 0.0}
+    return init, step, fin
+
+
+def _ewm_time_decay(tau, normalize):
+    """ewm_mean_by / ewm_sum_by: weight 0.5^(Δt/τ) on the past over
+    irregular intervals; the mean gives the new value 1 - 0.5^(Δt/τ)."""
+
+    def step(acc, s):
+        decay = F.pow(F.lit(0.5), (s["t"] - acc["pt"]) / tau)
+        x = (1.0 - decay) * s["x"] if normalize else s["x"]
+        return {
+            "y": F.when(acc["nn"] == 0, s["x"]).otherwise(decay * acc["y"] + x),
+            "pt": s["t"].cast("double"),
+        }
+
+    return {"y": 0.0, "pt": 0.0}, step, lambda acc: acc["y"]
+
+
+def _ewm_fold(ctx: "ExprContext", elem: Column, rec, *, ignore_nulls: bool, min_samples: int) -> Column:
+    """Lower one ewm recurrence ``rec`` over struct elements ``elem`` (field
+    ``x``, plus whatever the recurrence reads): each row folds its own
+    prefix in frame order.
+
+    - a window (top level or ``.over``): ``collect_list`` over the
+      order window up to the current row;
+    - a group (``group_by().agg``): the group's ordered array, sliced to
+      each position, so the result is one list per group with the group's
+      length (polars' implicit implode of a length-preserving expr).
+
+    ``ignore_nulls`` drops null elements before the fold; otherwise they
+    reach ``step`` and decay the weights.  A null input gives a null output,
+    and ``min_samples`` gates on the non-null count ``nn`` that the fold
+    keeps next to the recurrence's own state.
+
+    Each row re-folds its whole prefix: exact, but O(n²) per partition, so
+    this path suits bounded series (nested compositions, grouped lists).
+    A top-level ewm expression (``_ewm_spec``) is instead hoisted into one
+    O(n) streaming pass per key set (``LazyFrame._hoist_ewm``) that replays
+    the same IEEE op sequence."""
+    init, step, fin = rec
+    acc0 = F.struct(*[F.lit(v).alias(k) for k, v in init.items()], F.lit(0).alias("nn"))
+
+    def step_nn(acc, s):
+        fields = [c.alias(k) for k, c in step(acc, s).items()]
+        nn = acc["nn"] + F.when(s["x"].isNull(), 0).otherwise(1)
+        return F.struct(*fields, nn.alias("nn"))
+
+    def fold(prefix):
+        if ignore_nulls:
+            prefix = F.filter(prefix, lambda s: s["x"].isNotNull())
+        return F.aggregate(
+            prefix, acc0, step_nn, lambda acc: F.when(acc["nn"] >= min_samples, fin(acc))
+        )
+
+    if ctx.grouped and getattr(ctx, "_window", None) is None:
+        arr = _grouped_ordered_array(ctx, elem)
+        return F.transform(
+            arr, lambda s, i: F.when(s["x"].isNotNull(), fold(F.slice(arr, 1, i + 1)))
+        )
+    w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
+    return F.when(elem["x"].isNotNull(), fold(F.collect_list(elem).over(w)))
+
+
+def _ewm_expr(parent: "Expr", rec, *, ignore_nulls: bool, min_samples: int = 1, elem=None, spec=None) -> "Expr":
+    """The ewm expression over ``parent``: ``_ewm_fold`` of ``rec`` over the
+    elements ``{x: parent}``, or ``elem(ctx, x)``; ``spec`` (kind, alpha,
+    ...) marks it for the hoisted kernel."""
+
+    def fn(ctx: ExprContext) -> Column:
+        x = parent._resolve(ctx).cast("double").alias("x")
+        s = elem(ctx, x) if elem is not None else F.struct(x)
+        return _ewm_fold(ctx, s, rec, ignore_nulls=ignore_nulls, min_samples=min_samples)
+
+    e = Expr(fn, parent._name)
+    e._ctx_agg = True  # the grouped branch is already a list per group
+    if spec is not None:
+        alpha = spec["alpha"]
+        e._ewm_spec = {
+            **spec,
+            "parent": parent,
+            "decay": 1.0 - alpha,
+            "ignore_nulls": ignore_nulls,
+            "min_samples": min_samples,
+        }
+    return e
 
 
 def _grouped_ordered_array(ctx: "ExprContext", c: Column) -> Column:
@@ -2324,448 +2464,58 @@ class Expr:
         (polars-compute/src/ewm/mean.rs).  ``ignore_nulls=False`` (the
         reference default) decays the weights on null rows (absolute
         positions); ``True`` weights by relative position among non-nulls.
-        Lowering: collect the observed prefix per row (window) and fold it
-        with a (num, den) accumulator — exact, but O(n²) per partition, so
-        use it under .over(keys) with bounded series length; top-level calls
-        hoist into the O(n) mapInPandas kernel (LazyFrame._hoist_ewm).
-        """
-        if alpha is None:
-            if span is not None:
-                alpha = 2.0 / (span + 1.0)
-            elif com is not None:
-                alpha = 1.0 / (1.0 + com)
-            elif half_life is not None:
-                alpha = 1.0 - 2.0 ** (-1.0 / half_life)
-            else:
-                raise ValueError("ewm_mean needs alpha/span/com/half_life")
-        decay = 1.0 - alpha
-
-        def fn(ctx: ExprContext) -> Column:
-            c = self._resolve(ctx)
-            if ctx.grouped and getattr(ctx, "_window", None) is None:
-                # agg context (group_by().agg(col.ewm_mean())): the running
-                # mean over the group IN ROW ORDER as a list (polars implicit
-                # implode of a length-preserving expr) — prefix folds over the
-                # imploded array, O(k²) per group, bounded by group size
-                if not ignore_nulls:
-                    raw = _grouped_ordered_array(ctx, c)
-                    idx = F.sequence(F.lit(1), F.size(raw))
-                    if adjust:
-                        a0 = F.struct(
-                            F.lit(0.0).alias("num"),
-                            F.lit(0.0).alias("den"),
-                            F.lit(0).alias("nn"),
-                        )
-
-                        def _stepg(acc, x):
-                            return F.struct(
-                                (acc["num"] * decay + F.coalesce(x, F.lit(0.0))).alias("num"),
-                                (
-                                    acc["den"] * decay
-                                    + F.when(x.isNull(), 0.0).otherwise(1.0)
-                                ).alias("den"),
-                                (acc["nn"] + F.when(x.isNull(), 0).otherwise(1)).alias("nn"),
-                            )
-
-                        def _fing(acc):
-                            return F.when(acc["nn"] >= min_samples, acc["num"] / acc["den"])
-
-                    else:
-                        a0 = F.struct(
-                            F.lit(0.0).alias("y"),
-                            F.lit(1.0).alias("w"),
-                            F.lit(0).alias("nn"),
-                        )
-
-                        def _stepg(acc, x):
-                            w2 = acc["w"] * decay
-                            nw = w2 + alpha
-                            return F.struct(
-                                F.when(x.isNull(), acc["y"])
-                                .when(acc["nn"] == 0, x)
-                                .when(acc["w"] == 1.0, acc["y"] * decay + alpha * x)
-                                .otherwise(acc["y"] + (x - acc["y"]) * (alpha / nw))
-                                .alias("y"),
-                                F.when(
-                                    x.isNull(),
-                                    F.when(acc["nn"] > 0, w2).otherwise(acc["w"]),
-                                )
-                                .otherwise(F.lit(1.0))
-                                .alias("w"),
-                                (acc["nn"] + F.when(x.isNull(), 0).otherwise(1)).alias("nn"),
-                            )
-
-                        def _fing(acc):
-                            return F.when(acc["nn"] >= min_samples, acc["y"])
-
-                    return F.transform(
-                        idx,
-                        lambda i: F.when(
-                            F.get(raw, i - 1).isNotNull(),
-                            F.aggregate(F.slice(raw, 1, i), a0, _stepg, _fing),
-                        ),
-                    )
-                garr = F.filter(_grouped_ordered_array(ctx, c), lambda x: x.isNotNull())
-                idx = F.sequence(F.lit(1), F.size(garr))
-                if adjust:
-                    a0 = F.struct(F.lit(0.0).alias("num"), F.lit(0.0).alias("den"))
-                    return F.transform(
-                        idx,
-                        lambda i: F.when(
-                            i >= min_samples,
-                            F.aggregate(
-                                F.slice(garr, 1, i),
-                                a0,
-                                lambda acc, x: F.struct(
-                                    (acc["num"] * decay + x).alias("num"),
-                                    (acc["den"] * decay + 1.0).alias("den"),
-                                ),
-                                lambda acc: acc["num"] / acc["den"],
-                            ),
-                        ),
-                    )
-                a0 = F.struct(F.lit(0.0).alias("y"), F.lit(0).alias("started"))
-                return F.transform(
-                    idx,
-                    lambda i: F.when(
-                        i >= min_samples,
-                        F.aggregate(
-                            F.slice(garr, 1, i),
-                            a0,
-                            lambda acc, x: F.struct(
-                                F.when(acc["started"] == 1, acc["y"] * decay + alpha * x)
-                                .otherwise(x)
-                                .alias("y"),
-                                F.lit(1).alias("started"),
-                            ),
-                            lambda acc: acc["y"],
-                        ),
-                    ),
-                )
-            w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
-            if ignore_nulls:
-                arr = F.collect_list(c).over(w)  # drops nulls == ignore_nulls
-                if adjust:
-                    acc0 = F.struct(F.lit(0.0).alias("num"), F.lit(0.0).alias("den"))
-                    folded = F.aggregate(
-                        arr,
-                        acc0,
-                        lambda acc, x: F.struct(
-                            (acc["num"] * decay + x).alias("num"),
-                            (acc["den"] * decay + 1.0).alias("den"),
-                        ),
-                        lambda acc: acc["num"] / acc["den"],
-                    )
-                else:
-                    # recursive form: y_0 = x_0; y_t = (1-a)·y_{t-1} + a·x_t
-                    acc0 = F.struct(F.lit(0.0).alias("y"), F.lit(0).alias("started"))
-                    folded = F.aggregate(
-                        arr,
-                        acc0,
-                        lambda acc, x: F.struct(
-                            F.when(acc["started"] == 1, acc["y"] * decay + alpha * x)
-                            .otherwise(x)
-                            .alias("y"),
-                            F.lit(1).alias("started"),
-                        ),
-                        lambda acc: F.when(acc["started"] == 1, acc["y"]),
-                    )
-                out = F.when(F.size(arr) >= min_samples, folded)
-                return F.when(self._resolve(ctx).isNotNull(), out)
-            # ignore_nulls=False (reference default): nulls stay in the
-            # prefix as struct elements and decay the weights (mean.rs:
-            # weight *= 1-alpha on every row); bit-identical to the branch
-            # above on null-free data (0.0-adds preserve the op sequence)
-            arrn = F.collect_list(F.struct(c.alias("x"))).over(w)
-            nn = F.size(F.filter(arrn, lambda s: s["x"].isNotNull()))
-            if adjust:
-                acc0 = F.struct(F.lit(0.0).alias("num"), F.lit(0.0).alias("den"))
-                folded = F.aggregate(
-                    arrn,
-                    acc0,
-                    lambda acc, s: F.struct(
-                        (acc["num"] * decay + F.coalesce(s["x"], F.lit(0.0))).alias("num"),
-                        (
-                            acc["den"] * decay
-                            + F.when(s["x"].isNull(), 0.0).otherwise(1.0)
-                        ).alias("den"),
-                    ),
-                    lambda acc: acc["num"] / acc["den"],
-                )
-            else:
-                # reference recursion with per-row weight decay: state
-                # (y, w, cnt); w < 1 only right after null rows
-                acc0 = F.struct(
-                    F.lit(0.0).alias("y"), F.lit(1.0).alias("w"), F.lit(0).alias("cnt")
-                )
-
-                def _step(acc, s):
-                    xv = s["x"]
-                    w2 = acc["w"] * decay
-                    nw = w2 + alpha
-                    y_gen = acc["y"] + (xv - acc["y"]) * (alpha / nw)
-                    y_classic = acc["y"] * decay + alpha * xv
-                    return F.struct(
-                        F.when(xv.isNull(), acc["y"])
-                        .when(acc["cnt"] == 0, xv)
-                        .when(acc["w"] == 1.0, y_classic)
-                        .otherwise(y_gen)
-                        .alias("y"),
-                        F.when(
-                            xv.isNull(),
-                            F.when(acc["cnt"] > 0, w2).otherwise(acc["w"]),
-                        )
-                        .otherwise(F.lit(1.0))
-                        .alias("w"),
-                        (acc["cnt"] + F.when(xv.isNull(), 0).otherwise(1)).alias("cnt"),
-                    )
-
-                folded = F.aggregate(
-                    arrn, acc0, _step, lambda acc: F.when(acc["cnt"] > 0, acc["y"])
-                )
-            out = F.when(nn >= min_samples, folded)
-            return F.when(self._resolve(ctx).isNotNull(), out)
-
-        e = Expr(fn, self._name)
-        e._ctx_agg = True  # grouped branch is already aggregate-valued (list)
-        # frame-level scale path: top-level ewm exprs are hoisted into ONE
-        # applyInPandas pass per key set (O(n) per key, Arrow-batched, same
-        # IEEE op sequence) instead of the O(n²) per-row prefix fold — see
-        # LazyFrame._hoist_ewm.  The fold stays as the fallback for nested
-        # compositions.
-        e._ewm_spec = {
-            "kind": "mean",
-            "parent": self,
-            "decay": decay,
-            "alpha": alpha,
-            "adjust": adjust,
-            "ignore_nulls": ignore_nulls,
-            "min_samples": min_samples,
-        }
-        return e
+        Lowering: ``_ewm_fold``."""
+        a = _ewm_alpha(com, span, half_life, alpha)
+        rec = _ewm_mean_adjust(1.0 - a) if adjust else _ewm_mean_rec(1.0 - a, a)
+        return _ewm_expr(
+            self, rec, ignore_nulls=ignore_nulls, min_samples=min_samples,
+            spec={"kind": "mean", "alpha": a, "adjust": adjust},
+        )
 
     def ewm_mean_by(self, by, *, half_life: str):
         """Time-decay EWM (polars ewm_mean_by): irregular-interval recursive
-        mean  y_i = (1-a_i)·y_{i-1} + a_i·x_i  with  a_i = 1 - 0.5^(Δt/τ).
-        Lowering: per-row prefix fold over (value, epoch-µs) structs — exact,
-        order from the frame contract, partition from .over()."""
-        from polars_spark.plans.frame import _duration_us, _index_halflife
-
-        idx_tau = _index_halflife(half_life)
-        tau_us = idx_tau if idx_tau is not None else float(_duration_us(half_life))
-        by_e = _to_expr(by) if not isinstance(by, str) else col(by)
-
-        def fn(ctx: ExprContext) -> Column:
-            c = self._resolve(ctx)
-            bcol = by_e._resolve(ctx)
-            t = (
-                bcol.cast("double")
-                if idx_tau is not None
-                else F.unix_micros(bcol.cast("timestamp"))
-            )
-            w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
-            arr = F.collect_list(F.struct(c.alias("x"), t.alias("t"))).over(w)
-            acc0 = F.struct(
-                F.lit(0.0).alias("y"), F.lit(0).alias("started"), F.lit(0.0).alias("pt")
-            )
-
-            def step(acc, e):
-                decay = F.pow(F.lit(0.5), (e["t"] - acc["pt"]) / tau_us)
-                a = 1.0 - decay
-                return F.struct(
-                    F.when(acc["started"] == 1, decay * acc["y"] + a * e["x"])
-                    .otherwise(e["x"])
-                    .alias("y"),
-                    F.lit(1).alias("started"),
-                    e["t"].cast("double").alias("pt"),
-                )
-
-            folded = F.aggregate(arr, acc0, step, lambda acc: F.when(acc["started"] == 1, acc["y"]))
-            return F.when(c.isNotNull(), folded)
-
-        return Expr(fn, self._name)
+        mean  y_i = (1-a_i)·y_{i-1} + a_i·x_i  with  a_i = 1 - 0.5^(Δt/τ);
+        null values are skipped."""
+        return self._ewm_by(by, half_life, normalize=True)
 
     def ewm_sum_by(self, by, *, half_life: str):
-        """Time-decay EWM sum (polars ewm_sum_by): y_i = 0.5^(dt/tau)*y_{i-1}
-        + x_i over irregular intervals — same prefix-fold lowering as
-        ewm_mean_by without the normalization term."""
+        """Time-decay EWM sum (polars ewm_sum_by): y_i = 0.5^(Δt/τ)·y_{i-1}
+        + x_i over irregular intervals; null values are skipped."""
+        return self._ewm_by(by, half_life, normalize=False)
+
+    def _ewm_by(self, by, half_life: str, *, normalize: bool):
         from polars_spark.plans.frame import _duration_us, _index_halflife
 
         idx_tau = _index_halflife(half_life)
-        tau_us = idx_tau if idx_tau is not None else float(_duration_us(half_life))
+        tau = idx_tau if idx_tau is not None else float(_duration_us(half_life))
         by_e = _to_expr(by) if not isinstance(by, str) else col(by)
 
-        def fn(ctx: ExprContext) -> Column:
-            c = self._resolve(ctx)
-            bcol = by_e._resolve(ctx)
-            t = (
-                bcol.cast("double")
-                if idx_tau is not None
-                else F.unix_micros(bcol.cast("timestamp"))
-            )
-            w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
-            arr = F.collect_list(F.struct(c.alias("x"), t.alias("t"))).over(w)
-            acc0 = F.struct(
-                F.lit(0.0).alias("y"), F.lit(0).alias("started"), F.lit(0.0).alias("pt")
-            )
+        def elem(ctx: ExprContext, x: Column) -> Column:
+            b = by_e._resolve(ctx)
+            t = b.cast("double") if idx_tau is not None else F.unix_micros(b.cast("timestamp"))
+            return F.struct(x, t.alias("t"))
 
-            def step(acc, e):
-                decay = F.pow(F.lit(0.5), (e["t"] - acc["pt"]) / tau_us)
-                return F.struct(
-                    F.when(acc["started"] == 1, decay * acc["y"] + e["x"])
-                    .otherwise(e["x"])
-                    .alias("y"),
-                    F.lit(1).alias("started"),
-                    e["t"].cast("double").alias("pt"),
-                )
-
-            folded = F.aggregate(arr, acc0, step, lambda acc: F.when(acc["started"] == 1, acc["y"]))
-            return F.when(c.isNotNull(), folded)
-
-        return Expr(fn, self._name)
+        return _ewm_expr(self, _ewm_time_decay(tau, normalize), ignore_nulls=True, elem=elem)
 
     def ewm_std(self, *, alpha: float | None = None, span: float | None = None, com: float | None = None, half_life: float | None = None, adjust: bool = True, bias: bool = False, min_samples: int = 1, ignore_nulls: bool = False):
-        if half_life is not None and alpha is None:
-            import math
-
-            alpha = 1 - math.exp(-math.log(2) / half_life)
-        return self._ewm_var_std(
-            alpha, span, com, bias, min_samples, std=True,
-            adjust=adjust, ignore_nulls=ignore_nulls,
+        """EW standard deviation: the square root of ``ewm_var``."""
+        return self._ewm_var(
+            _ewm_alpha(com, span, half_life, alpha), adjust, bias, min_samples, ignore_nulls, std=True
         )
 
     def ewm_var(self, *, alpha: float | None = None, span: float | None = None, com: float | None = None, half_life: float | None = None, adjust: bool = True, bias: bool = False, min_samples: int = 1, ignore_nulls: bool = False):
-        if half_life is not None and alpha is None:
-            import math
-
-            alpha = 1 - math.exp(-math.log(2) / half_life)
-        return self._ewm_var_std(
-            alpha, span, com, bias, min_samples, std=False,
-            adjust=adjust, ignore_nulls=ignore_nulls,
+        """EW variance (polars-compute/src/ewm/cov.rs with x == y);
+        ``bias=False`` applies the (Σw)²/((Σw)²−Σw²) correction."""
+        return self._ewm_var(
+            _ewm_alpha(com, span, half_life, alpha), adjust, bias, min_samples, ignore_nulls, std=False
         )
 
-    def _ewm_var_std(
-        self, alpha, span, com, bias, min_samples, *, std: bool,
-        adjust: bool = True, ignore_nulls: bool = False,
-    ):
-        """EW variance/std (polars-compute/src/ewm/cov.rs): one fold
-        accumulates (Σw·x, Σw, Σw², Σw·x²); var = (Σwx²/Σw − m²) with the
-        (Σw)²/((Σw)²−Σw²) bias correction when bias=False.  adjust=False
-        weights new values by alpha (first by 1 — scale cancels in every
-        ratio, so no normalization pass is needed); ignore_nulls=False (the
-        reference default) decays all weights on null rows."""
-        if alpha is None:
-            if span is not None:
-                alpha = 2.0 / (span + 1.0)
-            elif com is not None:
-                alpha = 1.0 / (1.0 + com)
-            else:
-                raise ValueError("ewm needs alpha/span/com")
-        d = 1.0 - alpha
-
-        def fin_of(acc):
-            m = acc["s1"] / acc["s0"]
-            varb = acc["sx2"] / acc["s0"] - m * m
-            if not bias:
-                denom = acc["s0"] * acc["s0"] - acc["s2"]
-                varb = F.when(denom > 0, varb * acc["s0"] * acc["s0"] / denom)
-            varb = F.greatest(varb, F.lit(0.0))
-            return F.sqrt(varb) if std else varb
-
-        def fn(ctx: ExprContext) -> Column:
-            c = self._resolve(ctx)
-            exact = adjust and ignore_nulls  # historical bit-exact fold
-            if ctx.grouped and getattr(ctx, "_window", None) is None:
-                # agg context: running EW var/std over the group in row
-                # order, as a list (prefix folds over the imploded array)
-                if exact:
-                    garr = F.filter(_grouped_ordered_array(ctx, c), lambda x: x.isNotNull())
-                    idx = F.sequence(F.lit(1), F.size(garr))
-                    a0 = F.struct(
-                        F.lit(0.0).alias("s1"), F.lit(0.0).alias("s0"),
-                        F.lit(0.0).alias("s2"), F.lit(0.0).alias("sx2"),
-                    )
-
-                    def _prefix(i):
-                        def stepg(acc, x):
-                            return F.struct(
-                                (acc["s1"] * d + x).alias("s1"),
-                                (acc["s0"] * d + 1.0).alias("s0"),
-                                (acc["s2"] * d * d + 1.0).alias("s2"),
-                                (acc["sx2"] * d + x * x).alias("sx2"),
-                            )
-
-                        return F.aggregate(F.slice(garr, 1, i), a0, stepg, fin_of)
-
-                    return F.transform(idx, lambda i: F.when(i >= min_samples, _prefix(i)))
-                raw = (
-                    _grouped_ordered_array(ctx, c)
-                    if not ignore_nulls
-                    else F.filter(_grouped_ordered_array(ctx, c), lambda x: x.isNotNull())
-                )
-                idx = F.sequence(F.lit(1), F.size(raw))
-                if adjust:
-                    a0g, _stepgen, _fingen = _ewm_var_moment_fold(
-                        d, min_samples, fin_of, from_struct=False
-                    )
-                else:
-                    a0g, _stepgen, _fingen = _ewm_var_rec_fold(
-                        d, alpha, bias, std, min_samples, from_struct=False
-                    )
-                return F.transform(
-                    idx,
-                    lambda i: F.when(
-                        F.get(raw, i - 1).isNotNull(),
-                        F.aggregate(F.slice(raw, 1, i), a0g, _stepgen, _fingen),
-                    ),
-                )
-            w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
-            if exact:
-                arr = F.collect_list(c).over(w)
-                acc0 = F.struct(
-                    F.lit(0.0).alias("s1"), F.lit(0.0).alias("s0"),
-                    F.lit(0.0).alias("s2"), F.lit(0.0).alias("sx2"),
-                )
-                def step(acc, x):
-                    return F.struct(
-                        (acc["s1"] * d + x).alias("s1"),
-                        (acc["s0"] * d + 1.0).alias("s0"),
-                        (acc["s2"] * d * d + 1.0).alias("s2"),
-                        (acc["sx2"] * d + x * x).alias("sx2"),
-                    )
-                out = F.aggregate(arr, acc0, step, fin_of)
-                out = F.when(F.size(arr) >= min_samples, out)
-                return F.when(self._resolve(ctx).isNotNull(), out)
-            src = F.struct(c.alias("x"))
-            arrn = (
-                F.collect_list(src).over(w)
-                if not ignore_nulls
-                else F.collect_list(F.when(c.isNotNull(), src)).over(w)
-            )
-            if adjust:
-                acc0, stepn, finn = _ewm_var_moment_fold(
-                    d, min_samples, fin_of, from_struct=True
-                )
-            else:
-                acc0, stepn, finn = _ewm_var_rec_fold(
-                    d, alpha, bias, std, min_samples, from_struct=True
-                )
-            out = F.aggregate(arrn, acc0, stepn, finn)
-            return F.when(self._resolve(ctx).isNotNull(), out)
-
-        e = Expr(fn, self._name)
-        e._ctx_agg = True  # grouped branch is already aggregate-valued (list)
-        e._ewm_spec = {
-            "kind": "std" if std else "var",
-            "parent": self,
-            "decay": d,
-            "alpha": alpha,
-            "bias": bias,
-            "adjust": adjust,
-            "ignore_nulls": ignore_nulls,
-            "min_samples": min_samples,
-        }
-        return e
+    def _ewm_var(self, a, adjust, bias, min_samples, ignore_nulls, *, std: bool):
+        rec = _ewm_var_moments(1.0 - a, bias, std) if adjust else _ewm_var_rec(1.0 - a, a, bias, std)
+        return _ewm_expr(
+            self, rec, ignore_nulls=ignore_nulls, min_samples=min_samples,
+            spec={"kind": "std" if std else "var", "alpha": a, "adjust": adjust, "bias": bias},
+        )
 
     def rolling_skew(self, window_size: int, *, bias: bool = True, min_samples: int | None = None):
         """Rolling skew from windowed power sums (bias=False applies the
@@ -3367,59 +3117,12 @@ class Expr:
         """Exponentially weighted moving sum (polars-compute/src/ewm/sum.rs):
         the recursion s_t = (1-a)·s_{t-1} + x_t; under ignore_nulls=False
         (the reference default) null rows decay the sum, under True they are
-        skipped.  Lowering: the same prefix fold as ewm_mean — the previous
-        closed-form (1-a)^(-pos) window scaling overflowed IEEE range past
-        ~1000 rows and is gone."""
-        import math as _math
-
-        if alpha is None:
-            if half_life is not None:
-                alpha = 1 - _math.exp(-_math.log(2) / half_life)
-            elif span is not None:
-                alpha = 2.0 / (span + 1)
-            elif com is not None:
-                alpha = 1.0 / (1.0 + com)
-            else:
-                raise ValueError("ewm_sum needs alpha, com, half_life, or span")
-        a = float(alpha)
-        q = 1.0 - a
-
-        def fn(ctx: ExprContext) -> Column:
-            c = self._resolve(ctx).cast("double")
-            w = ctx.order_window().rowsBetween(Window.unboundedPreceding, 0)
-            if ignore_nulls:
-                arr = F.collect_list(c).over(w)
-                acc0 = F.struct(F.lit(0.0).alias("s"))
-                folded = F.aggregate(
-                    arr, acc0,
-                    lambda acc, x: F.struct((acc["s"] * q + x).alias("s")),
-                    lambda acc: acc["s"],
-                )
-                out = F.when(F.size(arr) >= min_samples, folded)
-                return F.when(c.isNotNull(), out)
-            arrn = F.collect_list(F.struct(c.alias("x"))).over(w)
-            nn = F.size(F.filter(arrn, lambda s: s["x"].isNotNull()))
-            acc0 = F.struct(F.lit(0.0).alias("s"))
-            folded = F.aggregate(
-                arrn, acc0,
-                lambda acc, s: F.struct(
-                    (acc["s"] * q + F.coalesce(s["x"], F.lit(0.0))).alias("s")
-                ),
-                lambda acc: acc["s"],
-            )
-            out = F.when(nn >= min_samples, folded)
-            return F.when(c.isNotNull(), out)
-
-        e = Expr(fn, self._name)
-        e._ewm_spec = {
-            "kind": "sum",
-            "parent": self,
-            "decay": q,
-            "alpha": a,
-            "ignore_nulls": ignore_nulls,
-            "min_samples": min_samples,
-        }
-        return e
+        skipped.  Lowering: ``_ewm_fold``."""
+        a = _ewm_alpha(com, span, half_life, alpha)
+        return _ewm_expr(
+            self, _ewm_sum(1.0 - a), ignore_nulls=ignore_nulls, min_samples=min_samples,
+            spec={"kind": "sum", "alpha": a},
+        )
 
     def rolling_std_by(self, by, window_size: str, *, min_samples: int = 1, ddof: int = 1, closed: str = "right"):
         f = F.stddev_samp if ddof == 1 else F.stddev_pop

@@ -1087,8 +1087,8 @@ class LazyFrame:
         return _to_expr(e)._resolve(ctx)
 
     def _hoist_ewm(self, exprs, named, method: str) -> "LazyFrame | None":
-        """Scale path for top-level ewm exprs (ewm_mean/std/var, optionally
-        .over(keys)): ONE streaming mapInPandas pass per key set over
+        """Scale path for top-level ewm exprs (ewm_mean/sum/std/var,
+        optionally .over(keys)): ONE streaming mapInPandas pass per key set over
         key-partitioned, key+order-sorted data computes every hoisted ewm at
         once (exact same IEEE sequence as the prefix fold — _ewm_stream_kernel),
         then the select/with_columns re-runs with the ewm exprs replaced by

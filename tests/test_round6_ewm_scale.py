@@ -1,7 +1,7 @@
 """Round 6: scale-safe ewm (VERDICT r5 item 4) and the with_row_index
 range-sampling determinism fix.
 
-ewm_mean/std/var as TOP-LEVEL exprs are hoisted into one applyInPandas
+ewm_mean/sum/std/var as TOP-LEVEL exprs are hoisted into one mapInPandas
 pass per key set (O(n) per key, Arrow-batched) that replays the exact
 IEEE op sequence of the expression-level prefix fold — so the bit-exact
 recursive-CTE oracles stay green while a 10⁶-row single-key series
@@ -15,42 +15,31 @@ import numpy as np
 import pytest
 
 import polars_spark as pl
+from tests.test_ewm_fold import CASES, bits, ewm
 
 
 @pytest.fixture(scope="module")
-def keyed():
-    rs = np.random.RandomState(1)
-    return pl.LazyFrame(
-        {"g": rs.randint(0, 10, 2000).astype(str), "x": rs.rand(2000)}
-    )
+def messy_keyed():
+    # nulls, one real NaN late in group "a", and groups long enough for
+    # min_samples to gate both before and after null gaps
+    rs = np.random.RandomState(11)
+    n = 120
+    g = [("a", "b", "c")[i % 3] for i in range(n)]
+    x = [None if i % 5 in (0, 3) else float(v) for i, v in enumerate(rs.rand(n) * 10 - 5)]
+    x[99] = float("nan")  # i % 3 == 0: group "a"
+    return pl.LazyFrame({"g": g, "x": x})
 
 
-@pytest.mark.parametrize(
-    "mk",
-    [
-        lambda e: e.ewm_mean(span=10),
-        lambda e: e.ewm_mean(span=10, adjust=False),
-        lambda e: e.ewm_std(span=10, bias=False),
-        lambda e: e.ewm_std(span=10, bias=True),
-        lambda e: e.ewm_var(span=10, bias=False),
-    ],
-    ids=["mean", "mean-noadjust", "std", "std-bias", "var"],
-)
-def test_hoisted_path_bit_exact_vs_fold(keyed, mk):
-    # top-level expr -> applyInPandas hoist; (expr * 1.0) -> prefix fold
-    h = (
-        keyed.with_columns(e=mk(pl.col("x")).over("g"))
-        .collect()
-        .sort_values("x")["e"]
-        .to_numpy()
-    )
-    f = (
-        keyed.with_columns(e=(mk(pl.col("x")) * 1.0).over("g"))
-        .collect()
-        .sort_values("x")["e"]
-        .to_numpy()
-    )
-    assert ((h == f) | (np.isnan(h) & np.isnan(f))).all()
+@CASES
+def test_hoisted_path_bit_exact_vs_fold(messy_keyed, case):
+    # top-level expr -> mapInPandas hoist; (expr * 1.0) -> prefix fold
+    def run(wrap):
+        e = wrap(ewm(pl.col("x"), case, min_samples=3))
+        return [bits(r["e"]) for r in messy_keyed.with_columns(e=e.over("g")).to_dicts()]
+
+    kernel = run(lambda e: e)
+    assert run(lambda e: e * 1.0) == kernel
+    assert "nan" in kernel and None in kernel
 
 
 def test_million_row_single_key_finishes_in_seconds():
@@ -74,7 +63,7 @@ def test_with_row_index_never_drops_rows_on_ordered_frames():
         assert out["i"].nunique() == 400_000
 
 
-def test_nulls_and_min_samples_match_fold(keyed):
+def test_nulls_and_min_samples_match_fold():
     rs = np.random.RandomState(2)
     xs = rs.rand(300)
     xs[::7] = np.nan
