@@ -23,7 +23,7 @@ from contextlib import contextmanager
 
 import pandas as pd
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -119,6 +119,19 @@ def _collect_bounded(df: DataFrame, cap: int, tag: str):
     with _job(tag):
         tbl = df.limit(cap + 1).toArrow()
     return None if tbl.num_rows > cap else tbl
+
+
+def _count(df: DataFrame, tag: str) -> int:
+    """``df``'s row count, by jobs named ``tag``: the engine's one eager
+    count.  The answer is ``DataFrame.count()``'s.
+
+    Why an RDD count: ``DataFrame.count()`` plans a global aggregate whose
+    single-partition exchange AQE runs as a job of its own before the
+    result job.  Counting the rows of ``df.select()`` (no column is read)
+    sums the per-partition counts at the driver in the one result job, so
+    only the shuffles ``df`` itself plans run before it."""
+    with _job(tag):
+        return df.select()._jdf.queryExecution().toRdd().count()
 
 
 # ---------------------------------------------------------------------------
@@ -396,14 +409,19 @@ def minhash_lsh_dedup(
     transitivity.  The recall trade (same as the standard web-dedup
     recipes): a doc joins a cluster only through its bucket representative,
     so a doc similar to the cluster but not to the representative can split
-    off; with 8 bands each doc gets 8 chances, making that rare."""
+    off; with 8 bands each doc gets 8 chances, making that rare.
+
+    A doc that shares several bands with one representative gives that
+    star edge once per band.  The repeats are kept: deduplicating them is
+    a shuffle of its own, while the verify join and connected components
+    take repeated pairs as they come (the driver union-find ignores a pair
+    it has already joined, the loop's edges are distinct)."""
     base, banded = _banded_corpus(df, id_col, text_col, n=n, k=k, bands=bands)
     rep = banded.groupBy("band").agg(F.min("doc").alias("d1"))
     star = (
         banded.join(rep, "band")
         .filter(F.col("doc") != F.col("d1"))
         .select("d1", F.col("doc").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
     )
     return connected_components(_verified_pairs(star, base, threshold).select("d1", "d2"))
 
@@ -506,7 +524,14 @@ def connected_components(
     A pair list of at most ``driver_solve_max`` rows, as given (duplicates
     and both directions count), skips the loop: one bounded Arrow collect
     of the pairs and a union-find at the driver.  Past the cap, or with a
-    null endpoint, the pairs are cached and the loop runs on them."""
+    null endpoint, the pairs are cached and the loop runs on them.
+    ``minhash_lsh_dedup`` hands over its star edges with their repeats (one
+    per shared band), so a repeated pair counts against the cap once per
+    copy.
+
+    A loop round is the round's own jobs only: the number of labels it
+    improved is an ``Observation`` of ``sum(__chg)`` on the checkpoint or
+    spill write that stores the round, not a scan of its own."""
     import shutil
     import tempfile
     import uuid
@@ -609,8 +634,8 @@ def connected_components(
                     "left",
                 ).select("u", F.coalesce("jlbl", "lbl").alias("plbl"))
             # the convergence flag rides the SAME pass (new < lbl is exactly
-            # "this round improved a label"), so detecting a fixed point is
-            # one scan of the spilled result
+            # "this round improved a label"); the observation below sums it
+            # while the round is stored, so a fixed point costs no scan
             staged = (
                 labels.join(neigh, "u", "left")
                 .join(jump, "u", "left")
@@ -631,6 +656,8 @@ def connected_components(
                 )
                 .withColumnRenamed("new", "lbl")
             )
+            obs = Observation()
+            staged = staged.observe(obs, F.sum(F.col("__chg").cast("long")).alias("chg"))
             if rnd < _CC_SPILL_AFTER:
                 # early rounds: the stats BigInt is still small — a plain
                 # eager checkpoint is cheaper than file I/O
@@ -649,10 +676,8 @@ def connected_components(
                 # the schema is known: re-reading with it skips the
                 # inference job a bare read starts every round
                 staged = spark.read.schema(staged.schema).parquet(path)
-            with _job("connected_components:converged"):
-                changed = staged.filter(F.col("__chg")).limit(1).count()
             labels = staged.drop("__chg")
-            if changed == 0:
+            if not obs.get["chg"]:  # null: a round over no labels
                 converged = True
                 break
         if not converged:
@@ -1077,7 +1102,9 @@ def embedding_near_dup_pairs(
     back to per-node interpretation.
     """
     if n_planes is None or n_tables is None:
-        n = corpus_size if corpus_size is not None else emb.count()
+        n = corpus_size
+        if n is None:
+            n = _count(emb, "embedding_near_dup_pairs:size")
         auto_planes, auto_tables = _auto_lsh_params(
             n, threshold, target_bucket_size, recall_target
         )
@@ -1741,10 +1768,10 @@ def fuzzy_string_pairs(
     can make the true answer itself quadratic (sequential ids at k=2: 50k
     names -> ~18M genuine pairs, ~18 min at the measured verify rate), and
     nothing in a lazy plan warns the caller.  With a cap set, the verified
-    output is counted through an incremental ``limit(cap+1).count()``
-    (Spark's CollectLimit scans partitions in escalating batches, so a
-    blown cap surfaces after a bounded prefix of the join, not the full
-    answer) and a RuntimeError reports the measured pair rate — mirroring
+    output is counted through ``limit(cap+1)`` (``_count``: every
+    partition stops at cap+1 rows, so a blown cap surfaces after a bounded
+    prefix of the join, not the full answer) and a RuntimeError reports
+    the measured pair rate — mirroring
     ``hot_pair_cap``'s fail-loudly style one level up.  ``None`` (default)
     keeps the unguarded behavior; on the success path the count costs one
     extra evaluation of the verify join, the price of the guarantee.
@@ -1947,7 +1974,7 @@ def fuzzy_string_pairs(
 
         cap = int(max_pairs)
         t0 = _time.perf_counter()
-        n = out.limit(cap + 1).count()
+        n = _count(out.limit(cap + 1), "fuzzy_string_pairs:cap")
         dt = max(_time.perf_counter() - t0, 1e-9)
         if n > cap:
             raise RuntimeError(

@@ -6,13 +6,15 @@ quality prior (Common Crawl publishes harmonic-centrality and PageRank-style
 host rankings; curated corpora weight or filter by them).  The operators
 here are the dataframe-native Pregel shape: one join + one keyed
 aggregation per superstep (messages unioned with a zero message per node,
-so the aggregate alone yields every node's new state), ``localCheckpoint``
+so the aggregate alone yields every node's new state; the first superstep
+needs no join, every node holding the same start rank), ``localCheckpoint``
 every few rounds to truncate lineage — the same iteration discipline as
 ``llm.connected_components``.
 
-Scale notes (100 TB / 10^9-node graphs): every iteration shuffles ranks
-once on src for the edge join and the messages once on node id — no driver
-materialization of nodes or edges beyond one scalar count; AQE handles hub
+Scale notes (100 TB / 10^9-node graphs): every iteration after the first
+shuffles ranks once on src for the edge join, and every iteration shuffles
+the messages once on node id — no driver materialization of nodes or edges
+beyond one scalar count (``_count``); AQE handles hub
 skew (a giant in-degree node is one hot reduce key — classic salting
 territory if it ever dominates; documented, not pre-salted, since rank
 aggregation is a plain sum and AQE skew-split already applies).
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from polars_spark.llm import _job, _materialize
+from polars_spark.llm import _count, _materialize
 
 __all__ = ["pagerank", "degree_stats"]
 
@@ -50,7 +52,11 @@ def pagerank(
     unioned with one ``(node, 0.0)`` row per node, then ONE groupBy(node)
     sum (shuffle on node).  The zero rows give nodes without in-edges their
     teleport-only rank without a left join back onto the node set, and
-    change no sum (``x + 0.0 == x``).
+    change no sum (``x + 0.0 == x``).  Superstep 1 skips the join: every
+    source holds the start rank ``1/N``, so its contributions are
+    ``1/N / out_degree`` straight off the out-edges (the same division, on
+    the same edge rows in the same order, so the same bits).  ``N`` is one
+    eager count (``_count``), the only driver round trip before the ranks.
     Lineage is truncated with localCheckpoint every ``_CHECKPOINT_EVERY``
     rounds so plan size stays O(1) per round.
     """
@@ -61,8 +67,7 @@ def pagerank(
         .distinct()
         .cache()
     )
-    with _job("pagerank:nodes"):
-        n = nodes.count()  # one scalar to the driver — the only eager step
+    n = _count(nodes, "pagerank:nodes")  # one scalar to the driver — the only eager step
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     out_e = e.join(deg, "u")  # (u, v, deg) — static over iterations
     out_e = out_e.cache()
@@ -75,7 +80,13 @@ def pagerank(
     # x + 0.0 == x leaves every other sum as it was
     zeros = nodes.select("node", F.lit(0.0).alias("c"))
     for i in range(iters):
-        contribs = out_e.join(ranks.withColumnRenamed("node", "u"), "u").select(
+        # superstep 1: every source's rank is the constant start rank
+        ranked = (
+            out_e.withColumn("rank", F.lit(1.0 / n))
+            if i == 0
+            else out_e.join(ranks.withColumnRenamed("node", "u"), "u")
+        )
+        contribs = ranked.select(
             F.col("v").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
         )
         ranks = (

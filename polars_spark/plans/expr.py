@@ -620,7 +620,12 @@ def _dtype_key(dtype) -> str:
 
 
 def _str_grammar_cast(
-    c: Column, spark_type: str, unsigned: bool, strict: bool, umax: int | None = None
+    ctx: ExprContext,
+    c: Column,
+    spark_type: str,
+    unsigned: bool,
+    strict: bool,
+    umax: int | None = None,
 ) -> Column:
     """polars str->numeric parse grammar (reference polars-compute/src/cast/
     binary_to.rs: ``atoi_simd`` for ints, ``fast_float2`` for floats — NO
@@ -628,70 +633,60 @@ def _str_grammar_cast(
     CAST trims and accepts more (' 7' -> 7), so string operands are gated on
     the polars grammar.  ``typeof()`` keeps this probe-free: no plan
     re-analysis, the branch stays inside whole-stage codegen, and non-string
-    operands take the plain cast unchanged.  ``unsigned``/``umax`` add the
-    polars VALUE range for unsigned targets (Spark's signed carrier type is
-    wider, so '300' -> UInt8 must yield null/raise, not 300)."""
-    is_str = F.typeof(c) == F.lit("string")
-    if spark_type in ("float", "double"):
-        pat = r"^[+-]?((\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?|(?i:inf|infinity|nan))$"
-        # fast_float2 parses SIGNED specials ('-nan' -> NaN) but Spark's
-        # special-literal table has unsigned 'nan' only -> canonicalize.
-        # Both CASE branches are built AT the target type (a typed NaN
-        # literal vs the operand's own cast) so the expression's result
-        # type never rides Spark's string-promotion rules for non-string
-        # operands (ADVICE r9) — and the branch stays probe-free.
-        signed_nan = is_str & c.cast("string").rlike(r"^[+-](?i:nan)$")
-        nan_lit = F.lit(float("nan")).cast(spark_type)
+    operands take the plain cast unchanged.  An operand that
+    ``ctx.may_be`` proves no string gets the plain cast without the
+    ``typeof`` branch, which is the plan the optimizer folds the branch to;
+    the branch's string literals would otherwise be string markers to
+    ``may_be`` in every expression built on the cast.  ``unsigned``/``umax``
+    add the polars VALUE range for unsigned targets (Spark's signed carrier
+    type is wider, so '300' -> UInt8 must yield null/raise, not 300)."""
+    res = c.cast(spark_type) if strict else c.try_cast(spark_type)
+    if ctx.may_be(c, ("string",)):
+        is_str = F.typeof(c) == F.lit("string")
+        if spark_type in ("float", "double"):
+            pat = r"^[+-]?((\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?|(?i:inf|infinity|nan))$"
+            # fast_float2 parses SIGNED specials ('-nan' -> NaN) but Spark's
+            # special-literal table has unsigned 'nan' only -> canonicalize.
+            # Both CASE branches are built AT the target type (a typed NaN
+            # literal vs the operand's own cast) so the expression's result
+            # type never rides Spark's string-promotion rules for non-string
+            # operands (ADVICE r9) — and the branch stays probe-free.
+            signed_nan = is_str & c.cast("string").rlike(r"^[+-](?i:nan)$")
+            res = F.when(signed_nan, F.lit(float("nan")).cast(spark_type)).otherwise(res)
+        else:
+            pat = r"^\+?\d+$" if unsigned else r"^[+-]?\d+$"
+        ok = F.when(is_str, c.cast("string").rlike(pat)).otherwise(F.lit(True))
+        if strict:
+            err = F.raise_error(
+                F.concat(
+                    F.lit(f"conversion from `str` to `{spark_type}` failed for value: "),
+                    c.cast("string"),
+                )
+            )
+            res = F.when(ok | c.isNull(), res).otherwise(err)
+        else:
+            res = F.when(ok, res)
 
-        def _typed(cast_fn):
-            return F.when(signed_nan, nan_lit).otherwise(cast_fn(c))
-    else:
-        pat = (r"^\+?\d+$" if unsigned else r"^[+-]?\d+$")
-
-        def _typed(cast_fn):
-            return cast_fn(c)
-
-    def _range_ok(r: Column) -> Column | None:
-        conds = []
-        if unsigned:
-            conds.append(r >= F.lit(0))
-        if umax is not None:
-            conds.append(r <= F.lit(str(umax)).cast(spark_type))
-        if not conds:
-            return None
-        cond = conds[0]
-        for x in conds[1:]:
-            cond = cond & x
-        return cond
-
-    ok = F.when(is_str, c.cast("string").rlike(pat)).otherwise(F.lit(True))
-    if strict:
-        err = F.raise_error(
+    conds = []
+    if unsigned:
+        conds.append(res >= F.lit(0))
+    if umax is not None:
+        conds.append(res <= F.lit(str(umax)).cast(spark_type))
+    if not conds:
+        return res
+    rng = conds[0]
+    for x in conds[1:]:
+        rng = rng & x
+    if not strict:
+        return F.when(res.isNull() | rng, res)
+    return F.when(res.isNull() | rng, res).otherwise(
+        F.raise_error(
             F.concat(
-                F.lit(f"conversion from `str` to `{spark_type}` failed for value: "),
+                F.lit(f"conversion to unsigned `{spark_type}` failed: out-of-range value "),
                 c.cast("string"),
             )
         )
-        res = F.when(ok | c.isNull(), _typed(lambda x: x.cast(spark_type))).otherwise(err)
-        rng = _range_ok(res)
-        if rng is not None:
-            res = F.when(res.isNull() | rng, res).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"conversion to unsigned `{spark_type}` failed:"
-                            " out-of-range value "
-                        ),
-                        c.cast("string"),
-                    )
-                )
-            )
-        return res
-    res = F.when(ok, _typed(lambda x: x.try_cast(spark_type)))
-    rng = _range_ok(res)
-    if rng is not None:
-        res = F.when(res.isNull() | rng, res)
-    return res
+    )
 
 
 class DecimalScaleFallbackWarning(UserWarning):
@@ -1301,7 +1296,7 @@ class Expr:
                 c = self._resolve(ctx)
                 if _is_time_col(ctx, c):
                     return _time_ns(c)
-                return _str_grammar_cast(c, spark_type, unsigned_big, strict, umax=umax_big)
+                return _str_grammar_cast(ctx, c, spark_type, unsigned_big, strict, umax=umax_big)
 
             return Expr(fn_big, self._name, self._is_agg)
         if spark_type in ("tinyint", "smallint", "int", "float", "double"):
@@ -1309,8 +1304,12 @@ class Expr:
             # trim-and-coerce CAST (see _str_grammar_cast)
             unsigned = dkey.startswith("UInt")
             umax = _UINT_MAX.get(dkey)
-            return self._map(
-                lambda c: _str_grammar_cast(c, spark_type, unsigned, strict, umax=umax)
+            return Expr(
+                lambda ctx: _str_grammar_cast(
+                    ctx, self._resolve(ctx), spark_type, unsigned, strict, umax=umax
+                ),
+                self._name,
+                self._is_agg,
             )
         if spark_type in ("decimal(20,0)", "decimal(38,0)") and dkey in (
             "UInt64",
@@ -1322,8 +1321,12 @@ class Expr:
             # (round-8 ADVICE: UInt64 previously bypassed the gate entirely)
             unsigned = dkey.startswith("UInt")
             umax = _UINT_MAX.get(dkey)
-            return self._map(
-                lambda c: _str_grammar_cast(c, spark_type, unsigned, strict, umax=umax)
+            return Expr(
+                lambda ctx: _str_grammar_cast(
+                    ctx, self._resolve(ctx), spark_type, unsigned, strict, umax=umax
+                ),
+                self._name,
+                self._is_agg,
             )
         if strict:
             return self._map(lambda c: c.cast(spark_type))

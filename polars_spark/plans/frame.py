@@ -37,6 +37,7 @@ import pandas as _pd
 from pyspark.sql import Column, DataFrame as SparkDF, SparkSession, Window
 from pyspark.sql import functions as F
 
+from polars_spark.llm import _count
 from polars_spark.plans.expr import (
     Expr,
     ExprContext,
@@ -656,9 +657,13 @@ class _CollectedFrame(_pd.DataFrame):
     ``_spark_dtypes`` (stamped by collect()) lets the row accessors undo
     pandas' nullable-int widening: an Int64 column with a null arrives as
     float64 (3 -> 3.0, null -> nan), but polars rows()/to_dicts() return
-    ints and None — restore both from the Spark schema."""
+    ints and None — restore both from the Spark schema.  A float column
+    cannot tell a null from a real NaN at all, so collect() also stamps
+    ``_null_rows``, the index labels of each float column's nulls: the
+    accessors return None there and keep NaN elsewhere.  Labels travel with
+    their rows through pandas ops (sort, filter, head)."""
 
-    _metadata = ["_spark_dtypes"]
+    _metadata = ["_spark_dtypes", "_null_rows"]
 
     @property
     def _constructor(self):
@@ -666,6 +671,9 @@ class _CollectedFrame(_pd.DataFrame):
 
     def _col_values(self, c) -> list:
         vals = [_py_value(v) for v in self[c].tolist()]
+        nulls = (getattr(self, "_null_rows", None) or {}).get(c)
+        if nulls:
+            vals = [None if v != v and i in nulls else v for i, v in zip(self.index, vals)]
         dt = getattr(self, "_spark_dtypes", None) or {}
         if dt.get(c) in _INT_SPARK_TYPES:
             vals = [
@@ -925,10 +933,28 @@ class LazyFrame:
             df = df.orderBy(*_order_cols(self._order))
         if ROW_IDX in df.columns:
             df = df.drop(ROW_IDX)
+        dtypes = dict(df.dtypes)
+        # toPandas gives a null double as NaN: flag the nulls in the same job
+        floats = [c for c, t in dtypes.items() if t in ("float", "double")]
+        flags = [f"__null_{i}__" for i in range(len(floats))]
+        if floats:
+            df = df.select(
+                "*",
+                *[
+                    F.isnull(F.col("`" + c.replace("`", "``") + "`")).alias(f)
+                    for c, f in zip(floats, flags)
+                ],
+            )
         with translate_runtime_errors():
             pdf = df.toPandas()
+        null_rows = {}
+        for c, f in zip(floats, flags):
+            isnull = pdf.pop(f)
+            if isnull.any():
+                null_rows[c] = frozenset(pdf.index[isnull.to_numpy()])
         pdf.__class__ = _CollectedFrame  # in-place view: no data copy
-        pdf._spark_dtypes = dict(df.dtypes)  # row accessors undo int widening
+        pdf._spark_dtypes = dtypes  # row accessors undo int widening
+        pdf._null_rows = null_rows  # ... and tell a null from a NaN
         return pdf
 
     def _collect_rows(self) -> list:
@@ -2021,7 +2047,7 @@ class LazyFrame:
         return LazyFrame(self._df.orderBy(F.rand(seed if seed is not None else 42)), [])
 
     def __len__(self) -> int:
-        return self._df.count()
+        return self.height
 
     def count(self) -> "LazyFrame":
         """Per-column NON-NULL counts as a 1-row frame (reference
@@ -2186,12 +2212,12 @@ class LazyFrame:
                 sdf, keys = (
                     (self_k.to_spark(), lon) if side == "left" else (other_k.to_spark(), ron)
                 )
-                dup = (
+                dup = _count(
                     sdf.groupBy(*keys)
                     .agg(F.count(F.lit(1)).alias("__n"))
                     .filter(F.col("__n") > 1)
-                    .limit(1)
-                    .count()
+                    .limit(1),
+                    "join:validate",
                 )
                 if dup:
                     msg = (
@@ -3286,7 +3312,7 @@ class LazyFrame:
     @property
     def height(self) -> int:
         """Row count (triggers a count job, like eager polars materializes)."""
-        return self._df.count()
+        return _count(self._df, "height:rows")
 
     @property
     def shape(self) -> tuple:
@@ -3364,7 +3390,7 @@ class LazyFrame:
 
     def n_unique(self, subset=None) -> int:
         if subset is None:
-            return self._df.distinct().count()
+            return _count(self.to_spark().distinct(), "n_unique:rows")
         return self.unique(subset=subset).height
 
     def is_empty_frame(self) -> bool:
@@ -3843,7 +3869,7 @@ class LazyFrame:
 
         f = self if columns is None else self.select(*self._resolve_name_selector(columns))
         names = f.columns
-        n = f._df.count()
+        n = _count(f._df, "unstack:rows")
         n_chunks = max(1, math.ceil(n / step))
         fi = f.with_row_index("__ui__")
         if how == "vertical":

@@ -121,6 +121,25 @@ def test_fractional_literals_start_no_probe(spark, probes, name):
     assert len(probes) == FRACTIONAL_LITERAL_PROBES[name]
 
 
+def test_numeric_cast_starts_no_probe(spark, probes):
+    """A cast whose operand ``may_be`` proves no string is the plain cast,
+    without the string-grammar branch, whose string literals are string
+    markers: agg_arg_minmax's ``round(...).cast(bigint) * 1e7 + c_custkey``
+    starts no probe for the ``+`` (string concat or numeric add)."""
+    from polars_spark.queries import QUERIES
+
+    QUERIES["agg_arg_minmax"](spark, SF_DIR)
+    assert probes == []
+
+
+def test_string_cast_keeps_its_grammar(ctx):
+    from polars_spark.plans.expr import _str_grammar_cast
+
+    assert "typeof" not in str(_str_grammar_cast(ctx, F.col("a"), "bigint", False, True))
+    assert "typeof" in str(_str_grammar_cast(ctx, F.col("s"), "bigint", False, True))
+    assert "typeof" in str(_str_grammar_cast(ExprContext(None), F.col("a"), "double", False, False))
+
+
 def test_decimal_literal_keeps_its_type(spark, pl):
     df = spark.range(1)
     for v in ("1.5", "0.05", "1.50", "-0", "1E+2", "0E-10"):

@@ -459,3 +459,30 @@ def test_map_groups_receives_frame_order(pl):
     out = df.group_by("g").map_groups(f, "g string, seq string").collect()
     got = dict(zip(out["g"], out["seq"]))
     assert got == {"a": "3,1,2", "b": "9"}  # insertion order inside the group
+
+
+def test_collected_rows_tell_null_from_nan(pl):
+    nan = float("nan")
+    lf = pl.LazyFrame({"x": [None, 2.0, nan], "n": [1, None, 3], "s": ["a", None, "c"]})
+    lazy = lf.to_dicts()
+    got = lf.collect().to_dicts()
+    assert [d["x"] is None for d in got] == [d["x"] is None for d in lazy] == [True, False, False]
+    assert got[1]["x"] == 2.0 and got[2]["x"] != got[2]["x"]  # a real NaN stays NaN
+    assert [d["n"] for d in got] == [1, None, 3]
+    assert [d["s"] for d in got] == ["a", None, "c"]
+    # the pandas frame itself is untouched: both are NaN there
+    assert lf.collect()["x"].isna().tolist() == [True, False, True]
+    # a null's row label travels with it through pandas row ops
+    back = lf.collect().sort_index(ascending=False)
+    assert [r[0] is None for r in back.rows()] == [False, False, True]
+    assert lf.collect().to_dict(as_series=False)["x"][0] is None
+
+
+def test_n_unique_ignores_the_hidden_order_column(pl, tmp_path):
+    path = str(tmp_path / "nu.parquet")
+    pd.DataFrame({"a": [1, 1, 2, 2]}).to_parquet(path)
+    scan = pl.scan_parquet(path)
+    # an order-sensitive column makes the scan pay its hidden row order
+    ordered = scan.with_columns(b=pl.col("a").cum_sum()).drop("b")
+    assert scan.n_unique() == ordered.n_unique() == 2
+    assert ordered.height == len(ordered) == 4

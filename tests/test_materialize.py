@@ -2,8 +2,10 @@
 ``llm._job`` context manager it is built on.  Pinned here: a checkpoint
 job carries its ``operator:phase`` tag in the status store while the
 caller's job group and description survive, also across an exception; no
-engine code checkpoints or pins a frame outside the named places; the
-minhash index is read back without a schema-inference job."""
+engine code checkpoints or pins a frame outside the named places, or counts
+rows eagerly outside ``llm._count``, which answers ``DataFrame.count()``
+in one job fewer under AQE; the minhash index is read back without a
+schema-inference job."""
 
 from __future__ import annotations
 
@@ -38,8 +40,27 @@ PINS = {
 }
 
 
-def _calls(attrs: set[str]) -> set[tuple[str, str]]:
-    """(file, enclosing function qualname) of every ``.attr(...)`` call."""
+# the functions that may call .count() with no arguments: the eager
+# DataFrame.count() only inside _count; every other entry is no eager count
+COUNTS = {
+    ("llm/__init__.py", "_count"),  # the engine's one eager count
+    ("llm/tokenizer.py", "train_bpe"),  # GroupedData.count(): a lazy aggregate
+    ("functions/__init__.py", "count"),  # Expr count: pl.count(name)
+    ("queries/relational.py", "rel_count_columns"),  # LazyFrame.count(): per-column counts, lazy
+    ("queries/streaming_gate.py", ""),  # itertools.count(): a sequence of numbers
+    # Expr count inside a polars query
+    ("queries/temporal.py", "tmp_rolling_30m"),
+    ("queries/temporal.py", "tmp_upsample_1h"),
+    ("queries/temporal.py", "evt_funnel"),
+    ("queries/tpch_full.py", "q13_customer_distribution"),
+    ("queries/tpch_full.py", "q21_suppliers_kept_waiting"),
+    ("queries/window.py", "win_agg_over"),
+}
+
+
+def _calls(attrs: set[str], *, bare: bool = False) -> set[tuple[str, str]]:
+    """(file, enclosing function qualname) of every ``.attr(...)`` call;
+    with ``bare``, of those without arguments only."""
     found = set()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -50,7 +71,7 @@ def _calls(attrs: set[str]) -> set[tuple[str, str]]:
                     walk(child, [*scope, child.name])
                     continue
                 if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
-                    if child.func.attr in attrs:
+                    if child.func.attr in attrs and not (bare and (child.args or child.keywords)):
                         found.add((rel, ".".join(scope)))
                 walk(child, scope)
 
@@ -64,6 +85,10 @@ def test_checkpoints_only_in_named_places():
 
 def test_cache_pins_only_in_named_places():
     assert _calls({"cache", "persist"}) - PINS == set()
+
+
+def test_eager_counts_only_in_count():
+    assert _calls({"count"}, bare=True) - COUNTS == set()
 
 
 @contextlib.contextmanager
@@ -125,3 +150,39 @@ def test_index_read_starts_no_job(spark, docs, tmp_path):  # noqa: F811
         dedup_against_index(docs, path, id_col="doc_id", text_col="text")
         assert list(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) == []
     assert _read_spark_written(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_count_is_one_job_under_aqe(spark, tmp_path):
+    """``_count`` answers ``DataFrame.count()`` and starts one job under AQE
+    where the count starts two: the count's single-partition exchange is
+    the job it saves.  A frame's own shuffle stays a job of its own."""
+    from pyspark.sql import functions as F
+
+    from polars_spark.llm import _count
+    from tests.conftest import make_active
+
+    path = str(tmp_path / "src")
+    spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 7).write.parquet(path)
+    s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    src = s.read.parquet(path)
+    frames = {
+        "filtered": (src.filter(F.col("k") > 2), 1),
+        "distinct": (src.select("k").distinct(), 2),  # + its own shuffle stage
+        "union": (src.unionByName(src), 1),
+        "limit": (src.limit(17), 1),
+        "empty": (src.filter(F.lit(False)), 1),
+    }
+    sc = spark.sparkContext
+    try:
+        for name, (df, jobs) in frames.items():
+            with _group(sc, "count") as group:
+                want = df.count()
+                eager = len(_descriptions(sc, group))
+            with _group(sc, "count") as group:
+                assert _count(df, "op:count") == want, name
+                assert _descriptions(sc, group) == ["op:count"] * jobs, name
+            assert jobs == (eager - 1 if name != "empty" else eager), name
+    finally:
+        make_active(spark)

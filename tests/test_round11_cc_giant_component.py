@@ -158,12 +158,8 @@ def test_driver_solve_max_bounds_pair_rows(spark, rows, null_end, loop):
     pairs = spark.createDataFrame(data, "d1 long, d2 long")
     got, descs = _cc_jobs(spark, pairs, driver_solve_max=6)
     assert descs.count("connected_components:edges") == 1
-    assert ("connected_components:converged" in descs) is loop
-    assert set(descs) <= {
-        "connected_components:edges",
-        "connected_components:round",
-        "connected_components:converged",
-    }
+    assert ("connected_components:round" in descs) is loop
+    assert set(descs) <= {"connected_components:edges", "connected_components:round"}
     assert got == _cc_jobs(spark, pairs, driver_solve_max=0)[0]
 
 
@@ -187,3 +183,32 @@ def test_driver_path_jobs_on_multi_file_source(spark, tmp_path_factory, aqe, par
         make_active(spark)  # the driver path's createDataFrame made s active
     assert descs == ["connected_components:edges"]
     assert len(got) == 1200 and all(c == d - d % 2 for d, c in got)
+
+
+# Jobs the distributed loop (driver_solve_max=0) starts over a 100-node path
+# plus one pair at 4 shuffle partitions: 10 rounds, the last two spilled.
+# The convergence flag is an Observation on each round's checkpoint or
+# spill write; a separate flag scan per round cost 1 job more per round
+# with AQE off and 2 with AQE on (32 and 108 jobs in all).
+CC_LOOP_JOBS = {"false": 22, "true": 88}
+
+
+@pytest.mark.parametrize("aqe", sorted(CC_LOOP_JOBS))
+def test_loop_round_carries_its_convergence_flag(spark, aqe):
+    s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", aqe)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    ids = list(range(1, 101))
+    try:
+        pairs = s.createDataFrame(list(zip(ids, ids[1:])) + [(1000, 1001)], "d1 long, d2 long")
+        got, descs = _cc_jobs(s, pairs, driver_solve_max=0)
+        driver, _ = _cc_jobs(s, pairs)
+    finally:
+        make_active(spark)
+    assert set(descs) == {
+        "connected_components:round",
+        "connected_components:spill",
+        "connected_components:labels",
+    }
+    assert len(descs) <= CC_LOOP_JOBS[aqe]
+    assert got == driver == {(i, 1) for i in ids} | {(1000, 1000), (1001, 1000)}
