@@ -412,16 +412,19 @@ def minhash_lsh_dedup(
     off; with 8 bands each doc gets 8 chances, making that rare.
 
     A doc that shares several bands with one representative gives that
-    star edge once per band.  The repeats are kept: deduplicating them is
-    a shuffle of its own, while the verify join and connected components
-    take repeated pairs as they come (the driver union-find ignores a pair
-    it has already joined, the loop's edges are distinct)."""
+    star edge once per band, and near-duplicates share most bands: on the
+    generated corpus 86% of the star edges are repeats (1740 edges, 247
+    distinct, at sf0.1).  The repeats are dropped before the verify join,
+    which would otherwise compute the shingle-set Jaccard once per copy and
+    count every copy against ``connected_components``' driver cap; the
+    dedup is a shuffle of its own, one job."""
     base, banded = _banded_corpus(df, id_col, text_col, n=n, k=k, bands=bands)
     rep = banded.groupBy("band").agg(F.min("doc").alias("d1"))
     star = (
         banded.join(rep, "band")
         .filter(F.col("doc") != F.col("d1"))
         .select("d1", F.col("doc").alias("d2"))
+        .dropDuplicates(["d1", "d2"])
     )
     return connected_components(_verified_pairs(star, base, threshold).select("d1", "d2"))
 
@@ -525,9 +528,6 @@ def connected_components(
     and both directions count), skips the loop: one bounded Arrow collect
     of the pairs and a union-find at the driver.  Past the cap, or with a
     null endpoint, the pairs are cached and the loop runs on them.
-    ``minhash_lsh_dedup`` hands over its star edges with their repeats (one
-    per shared band), so a repeated pair counts against the cap once per
-    copy.
 
     A loop round is the round's own jobs only: the number of labels it
     improved is an ``Observation`` of ``sum(__chg)`` on the checkpoint or

@@ -195,18 +195,26 @@ class ExprContext:
         names ("boolean", "interval", "decimal", "time", ...; a nested type
         is of the kinds of its parts).  The proof is textual: no marker of
         a kind in ``c``'s SQL (_KIND_MARKERS) and no reference to a frame
-        column of such a type.  Without a frame nothing is proven.  Not
-        covered: Python UDFs, whose text shows no return type."""
+        column of such a type.  Without a frame nothing is proven.  A Python
+        or pandas UDF prints its function's name, not its return type, so
+        a column holding one proves nothing either.  Spark builds a UDF call
+        from a Catalyst expression (an ``ExpressionColumnNode``), not from
+        column nodes, and any column holding such a node is let through."""
         if self.df is None:
             return True
         txt = _sql_text(c)
         if any(_KIND_MARKERS[k].search(txt) for k in kinds):
             return True
-        return any(
+        if any(
             re.search(rf"(?<!\w){re.escape(f.name)}(?!\w)", txt)
             for f in self.df.schema.fields
             if set(kinds) & set(re.findall("[a-z]+", f.dataType.simpleString()))
-        )
+        ):
+            return True
+        try:
+            return "ExpressionColumnNode(" in c._jc.node().toString()
+        except (AttributeError, Py4JError):  # no JVM column (Spark Connect)
+            return True
 
     def order_specs(self) -> list[tuple[str, bool]]:
         return [(o, False) if isinstance(o, str) else (o[0], bool(o[1])) for o in self.order_cols]

@@ -658,22 +658,26 @@ class _CollectedFrame(_pd.DataFrame):
     pandas' nullable-int widening: an Int64 column with a null arrives as
     float64 (3 -> 3.0, null -> nan), but polars rows()/to_dicts() return
     ints and None — restore both from the Spark schema.  A float column
-    cannot tell a null from a real NaN at all, so collect() also stamps
-    ``_null_rows``, the index labels of each float column's nulls: the
-    accessors return None there and keep NaN elsewhere.  Labels travel with
-    their rows through pandas ops (sort, filter, head)."""
+    cannot tell a null from a real NaN at all, so collect() writes each
+    float null as a NaN with its own payload (``_NULL_NAN``): pandas sees a
+    NaN like any other, and the accessors return None for it and keep a
+    real NaN.  The mark is in the value's bits, so it moves with its row
+    through every pandas op (sort, filter, reset_index, concat), and
+    arithmetic on it carries it on as polars carries a null; a NaN written
+    anew is a plain NaN."""
 
-    _metadata = ["_spark_dtypes", "_null_rows"]
+    _metadata = ["_spark_dtypes"]
 
     @property
     def _constructor(self):
         return _CollectedFrame
 
     def _col_values(self, c) -> list:
-        vals = [_py_value(v) for v in self[c].tolist()]
-        nulls = (getattr(self, "_null_rows", None) or {}).get(c)
-        if nulls:
-            vals = [None if v != v and i in nulls else v for i, v in zip(self.index, vals)]
+        col = self[c]
+        vals = [_py_value(v) for v in col.tolist()]
+        marked = _null_nan_mask(col.to_numpy())
+        if marked is not None and marked.any():
+            vals = [None if m else v for m, v in zip(marked, vals)]
         dt = getattr(self, "_spark_dtypes", None) or {}
         if dt.get(c) in _INT_SPARK_TYPES:
             vals = [
@@ -705,6 +709,19 @@ class _CollectedFrame(_pd.DataFrame):
 
     def to_dicts(self) -> list:
         return self.rows(named=True)
+
+
+# the bits of a float null in a collected frame: a quiet NaN with payload 1,
+# which no arithmetic creates (it only passes an operand's payload on) and
+# Spark's NaN does not have
+_NULL_NAN = {"float64": (0x7FF8000000000001, "uint64"), "float32": (0x7FC00001, "uint32")}
+
+
+def _null_nan_mask(a):
+    """Where the float array ``a`` holds the null mark, or None for an
+    array of another dtype."""
+    mark = _NULL_NAN.get(str(a.dtype))
+    return None if mark is None else a.view(mark[1]) == mark[0]
 
 
 def _py_value(v):
@@ -947,14 +964,16 @@ class LazyFrame:
             )
         with translate_runtime_errors():
             pdf = df.toPandas()
-        null_rows = {}
         for c, f in zip(floats, flags):
-            isnull = pdf.pop(f)
-            if isnull.any():
-                null_rows[c] = frozenset(pdf.index[isnull.to_numpy()])
+            isnull = pdf.pop(f).to_numpy()
+            vals = pdf[c].to_numpy()
+            mark = _NULL_NAN.get(str(vals.dtype))
+            if mark is not None and isnull.any():
+                vals = vals.copy()  # the arrow-backed array may be read-only
+                vals.view(mark[1])[isnull] = mark[0]
+                pdf[c] = vals
         pdf.__class__ = _CollectedFrame  # in-place view: no data copy
         pdf._spark_dtypes = dtypes  # row accessors undo int widening
-        pdf._null_rows = null_rows  # ... and tell a null from a NaN
         return pdf
 
     def _collect_rows(self) -> list:

@@ -77,6 +77,9 @@ def ctx(spark):
         (lambda: F.hour(F.col("ts")), ("time",), False),
         (lambda: F.col("a") * F.lit(0.1), ("decimal",), False),
         (lambda: F.col("a") / F.lit(1e-7), ("decimal",), False),
+        # a UDF prints its function's name, not its return type
+        (lambda: F.udf(lambda v: str(v), "string")(F.col("a")), ("string",), True),
+        (lambda: F.udf(lambda: "x", "string")(), ("string",), True),
     ],
 )
 def test_may_be(ctx, make, kinds, expected):
@@ -138,6 +141,20 @@ def test_string_cast_keeps_its_grammar(ctx):
     assert "typeof" not in str(_str_grammar_cast(ctx, F.col("a"), "bigint", False, True))
     assert "typeof" in str(_str_grammar_cast(ctx, F.col("s"), "bigint", False, True))
     assert "typeof" in str(_str_grammar_cast(ExprContext(None), F.col("a"), "double", False, False))
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_udf_string_cast_keeps_its_grammar(pl, strict):
+    """A string the operand's text does not show (a UDF's result) is still
+    parsed by the polars grammar: ' 7' is no Int64, where Spark's CAST
+    trims it to 7."""
+    padded = pl.col("i").map_elements(lambda v: f" {v}", return_dtype=pl.String)
+    q = pl.LazyFrame({"i": [7]}).select(padded.cast(pl.Int64, strict=strict))
+    if strict:
+        with pytest.raises(Exception, match="conversion from `str` to `bigint` failed"):
+            q.collect()
+    else:
+        assert q.collect().to_dicts() == [{"i": None}]
 
 
 def test_decimal_literal_keeps_its_type(spark, pl):

@@ -472,10 +472,20 @@ def test_collected_rows_tell_null_from_nan(pl):
     assert [d["s"] for d in got] == ["a", None, "c"]
     # the pandas frame itself is untouched: both are NaN there
     assert lf.collect()["x"].isna().tolist() == [True, False, True]
-    # a null's row label travels with it through pandas row ops
+    # a null's mark travels with its row through pandas row ops, also
+    # those that renumber the index
     back = lf.collect().sort_index(ascending=False)
     assert [r[0] is None for r in back.rows()] == [False, False, True]
+    renumbered = lf.collect().iloc[::-1].reset_index(drop=True)
+    assert [d["x"] is None for d in renumbered.to_dicts()] == [False, False, True]
+    assert renumbered.to_dicts()[0]["x"] != renumbered.to_dicts()[0]["x"]
     assert lf.collect().to_dict(as_series=False)["x"][0] is None
+    # a column written anew under the same name holds plain NaNs
+    rewritten = lf.collect()
+    rewritten["x"] = [nan, 1.0, None]
+    assert [d["x"] is None for d in rewritten.to_dicts()] == [False, False, False]
+    f32 = pl.LazyFrame({"x": [None, 2.0, nan]}, schema={"x": pl.Float32})
+    assert [d["x"] is None for d in f32.collect().to_dicts()] == [True, False, False]
 
 
 def test_n_unique_ignores_the_hidden_order_column(pl, tmp_path):

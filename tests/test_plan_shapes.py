@@ -114,9 +114,8 @@ JOB_PINS = {
 # every shuffle stage is a job of its own, so a stage a superstep or a
 # probe adds shows here even when it is no job of its own with AQE off.
 # pagerank's node count is one RDD count (_count), not an aggregate whose
-# exchange is a job, and its first superstep broadcasts nothing; the star
-# edges of the minhash dedup are not deduplicated by a shuffle.
-AQE_JOB_PINS = {"dedup_minhash_star": 10, "sim_ivf_topk": 10, "web_pagerank": 17}
+# exchange is a job, and its first superstep broadcasts nothing.
+AQE_JOB_PINS = {"dedup_minhash_star": 11, "sim_ivf_topk": 10, "web_pagerank": 17}
 
 
 def _build_jobs(spark, name, **conf) -> int:

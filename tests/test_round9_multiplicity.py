@@ -82,3 +82,23 @@ def test_dedup_results_agree_across_forms(pl, spark):
         assert {assigned[x] for x in ids} == {ids[0]}
     pairs = minhash_lsh_pairs(df, "doc_id", "text").count()
     assert pairs == 15 * 5 * 4 // 2
+
+
+def test_dedup_verifies_each_star_edge_once(pl, spark, monkeypatch):
+    """Exact copies share all 8 bands with their representative, so the
+    star join gives each edge 8 times.  minhash_lsh_dedup drops the repeats
+    before the verify join: connected components gets the closed form
+    d * (m - 1), not bands times that."""
+    import polars_spark.llm as llm
+
+    seen = []
+    cc = llm.connected_components
+
+    def counting(pairs, **kw):
+        seen.append(pairs.count())
+        return cc(pairs, **kw)
+
+    monkeypatch.setattr(llm, "connected_components", counting)
+    d, mult = 10, 4
+    llm.minhash_lsh_dedup(_corpus(spark, d, mult), "doc_id", "text").collect()
+    assert seen == [d * (mult - 1)]
